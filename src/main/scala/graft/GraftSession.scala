@@ -62,14 +62,15 @@ object GraftSession {
       })
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // Let AQE optimize the plan that MATERIALIZES a cached frame
-      // (default false only to preserve the cached plan's declared
-      // output partitioning for downstream reuse — a conservatism this
-      // engine never relies on). Without it, every .cache() build runs
-      // the pre-AQE plan: no runtime broadcast conversion, no partition
-      // coalescing — measured as the commit paths' cached hit-row /
-      // source builds paying full-width shuffles for KB-sized frames.
-      // Semantically a no-op; results are partitioning-independent.
+      // false: the job that MATERIALIZES a cached frame is planned with
+      // AQE off, so the cached plan keeps its declared output
+      // partitioning for downstream reuse, and every .cache() build runs
+      // the pre-AQE plan (no runtime broadcast conversion, no partition
+      // coalescing). `c8fb3fc` set true, for the commit paths' cached
+      // hit-row and source builds; `ca0b32e` set false again. Neither
+      // recorded a measurement of the flip. Either value gives the same
+      // results (they do not depend on partitioning); the choice moves
+      // every workload's timings and is left to an end-to-end A/B.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

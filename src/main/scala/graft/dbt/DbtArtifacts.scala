@@ -6,18 +6,22 @@ import org.apache.spark.sql.functions._
 import ArtifactSchemas._
 
 /** Spark-native readers for dbt JSON artifacts — the reference engine's
-  * entire product surface (/root/reference/explore.R).
+  * entire product surface (explore.R).
   *
-  * Design (SURVEY.md §3): wholetext read → `from_json` with explicit
-  * map-keyed schemas → `explode(map_entries(...))` per section → typed
-  * projections → `unionByName` → NULLS-LAST sort. All transforms are
-  * built-in Catalyst expressions — nested-schema pruning, constant
-  * folding and codegen apply end to end; a manifest file is one row, so
-  * the only exchange in `readManifest` is the final ORDER BY.
+  * Design (SURVEY.md §3): wholetext read → ONE `from_json` per file with
+  * explicit map-keyed schemas → each section's map values `transform`ed
+  * into typed row structs → `inline(concat(sections))`, one generator
+  * per file → NULLS-LAST sort. All transforms are built-in Catalyst
+  * expressions — constant folding and codegen apply end to end, and
+  * each file is scanned and parsed once per job.
   *
-  * At fleet scale (thousands of manifests), the same plans run over a
-  * directory glob instead of a single path — each file stays one row
-  * and the explodes parallelize per file; nothing here is driver-side.
+  * The single-path readers (`readManifest`, `readManifestUnsorted`,
+  * `readCatalog`, …) treat their input as ONE artifact: a file is one
+  * row and so one partition, and `readManifest` sorts it inside that
+  * partition — a single job with no exchange. Globs and directories of
+  * manifests belong to `readManifestAll`, whose files parse in parallel
+  * and whose sort is a distributed ORDER BY; nothing here is
+  * driver-side.
   */
 object DbtArtifacts {
 
@@ -94,6 +98,12 @@ object DbtArtifacts {
   private val emptyColumns: Column = array().cast(manifestColumnsOutType)
   private def nullStr: Column = lit(null).cast("string")
 
+  /** Each element of `arr` as one output row's struct. A NULL `arr` (an
+    * absent or NULL section) becomes an empty array, so that section
+    * adds no rows instead of nulling the whole `concat` of sections. */
+  private def sectionRows(arr: Column)(row: Column => Seq[Column]): Column =
+    coalesce(transform(arr, v => struct(row(v): _*)), array())
+
   /** The reference's presentation order (arrange, explore.R:251-257):
     * dplyr places NA last; Spark's bare asc is nulls-first. Optionally
     * prefixed by extra keys (source_file for the fleet glob variant). */
@@ -105,20 +115,19 @@ object DbtArtifacts {
 
   /** `import_manifest_json` (explore.R:223-259): nodes ∪ sources ∪
     * macros as one table with the SURVEY §1.5 schema, in the reference's
-    * presentation order.
+    * presentation order. The file is one row, so the rows are sorted in
+    * its one partition (`coalesce(1)`): the planner needs no range
+    * exchange, whose sampling job would parse the file a second time.
     */
   def readManifest(spark: SparkSession, path: String): DataFrame =
-    presentationSort(readManifestUnsorted(spark, path))
+    presentationSort(readManifestUnsorted(spark, path).coalesce(1))
 
   /** The manifest view WITHOUT the presentation sort. Derived operators
-    * (lineage edges, closure, diff, impact) are order-insensitive, and
-    * the final ORDER BY is a RangePartitioning exchange that costs a
-    * sampling job per call — callers that immediately explode or join
-    * should start here. */
+    * (lineage edges, closure, diff, impact) are order-insensitive and
+    * skip the sort's per-row work — callers that immediately explode or
+    * join should start here. */
   def readManifestUnsorted(spark: SparkSession, path: String): DataFrame =
-    manifestFromRaw(
-      rawJson(spark, path).withColumn("source_file", input_file_name())
-    ).drop("source_file")
+    manifestFromRaw(rawJson(spark, path))
 
   /** Dual-input convention (SURVEY §2.1 S3 — the reference importers
     * accept a path OR an already-parsed object, explore.R:37-41,
@@ -128,7 +137,7 @@ object DbtArtifacts {
     */
   def readManifest(raw: DataFrame): DataFrame = {
     require(raw.columns.contains("value"), "expected a 'value' column holding manifest JSON")
-    presentationSort(manifestFromRaw(raw.withColumn("source_file", lit(""))).drop("source_file"))
+    presentationSort(manifestFromRaw(raw))
   }
 
   /** Dual-input overload for the catalog (explore.R:37-41). */
@@ -141,92 +150,95 @@ object DbtArtifacts {
     * (e.g. one per project per run). Each file is still a single row
     * into `from_json`, so parsing parallelizes per file across
     * executors; output carries `source_file` provenance and sorts it
-    * first so per-manifest blocks stay contiguous.
+    * first so per-manifest blocks stay contiguous. The sort is a
+    * distributed ORDER BY: its range-sampling job scans and parses the
+    * files once more, and a corrupt or section-less file contributes
+    * no rows.
     */
   def readManifestAll(spark: SparkSession, glob: String): DataFrame =
     manifestFromRaw(
       spark.read
         .option("wholetext", "true")
         .text(glob)
-        .withColumn("source_file", input_file_name())
-)
-      .transform(presentationSort(_, "source_file"))
+        .withColumn("source_file", input_file_name()),
+      "source_file"
+    ).transform(presentationSort(_, "source_file"))
 
-  private def manifestFromRaw(raw: DataFrame): DataFrame = {
-    val m = raw.select(from_json(col("value"), manifestSchema).as("m"), col("source_file"))
-
+  /** One `from_json` per document and one generator over it: each
+    * section's map values become typed row structs, the three arrays are
+    * concatenated in bind_rows order (:246-250) and `inline` turns the
+    * elements into rows. `keep` names columns of `raw` carried onto
+    * every row (the fleet reader's `source_file`).
+    */
+  private def manifestFromRaw(raw: DataFrame, keep: String*): DataFrame = {
     // explore.R:140-169 — note unique_id comes from the FIELD (:144),
     // unlike the catalog where it is the map key.
-    val nodes = m
-      .select(col("source_file"), explode(map_entries(col("m.nodes"))).as("e"))
-      .select(
-        col("source_file"),
-        col("e.value.unique_id").as("unique_id"),
+    val nodes = sectionRows(map_values(col("m.nodes"))) { v =>
+      Seq(
+        v("unique_id").as("unique_id"),
         lit("nodes").as("manifest_group"),
-        col("e.value.resource_type").as("resource_type"),
-        col("e.value.database").as("database"),
-        col("e.value.schema").as("schema"),
-        coalesce(col("e.value.alias"), col("e.value.name")).as("name"), // :149
-        col("e.value.description").as("description"),
-        col("e.value.config.enabled").as("is_enabled"),
-        col("e.value.config.materialized").as("materialized_as"),
-        dependsOnCol(col("e.value.depends_on")).as("depends_on"),
-        manifestColumnsCol(col("e.value.columns")).as("columns"),
-        col("e.value.meta").as("meta"),
-        col("e.value.tags").as("tags"),
+        v("resource_type").as("resource_type"),
+        v("database").as("database"),
+        v("schema").as("schema"),
+        coalesce(v("alias"), v("name")).as("name"), // :149
+        v("description").as("description"),
+        v("config")("enabled").as("is_enabled"),
+        v("config")("materialized").as("materialized_as"),
+        dependsOnCol(v("depends_on")).as("depends_on"),
+        manifestColumnsCol(v("columns")).as("columns"),
+        v("meta").as("meta"),
+        v("tags").as("tags"),
         // checksum kept only when the algorithm is sha256 (:159-162)
-        when(col("e.value.checksum.name") === "sha256", col("e.value.checksum.checksum"))
-          .as("sha256")
+        when(v("checksum")("name") === "sha256", v("checksum")("checksum")).as("sha256")
       )
+    }
 
     // explore.R:171-197
-    val sources = m
-      .select(col("source_file"), explode(map_entries(col("m.sources"))).as("e"))
-      .select(
-        col("source_file"),
-        col("e.value.unique_id").as("unique_id"),
+    val sources = sectionRows(map_values(col("m.sources"))) { v =>
+      Seq(
+        v("unique_id").as("unique_id"),
         lit("sources").as("manifest_group"),
-        col("e.value.resource_type").as("resource_type"),
-        col("e.value.database").as("database"),
-        col("e.value.schema").as("schema"),
-        col("e.value.identifier").as("name"), // :180
-        col("e.value.description").as("description"),
-        col("e.value.config.enabled").as("is_enabled"),
+        v("resource_type").as("resource_type"),
+        v("database").as("database"),
+        v("schema").as("schema"),
+        v("identifier").as("name"), // :180
+        v("description").as("description"),
+        v("config")("enabled").as("is_enabled"),
         nullStr.as("materialized_as"), // :183
         emptyDependsOn.as("depends_on"), // :184-185
-        manifestColumnsCol(col("e.value.columns")).as("columns"),
-        col("e.value.meta").as("meta"),
-        col("e.value.tags").as("tags"),
+        manifestColumnsCol(v("columns")).as("columns"),
+        v("meta").as("meta"),
+        v("tags").as("tags"),
         nullStr.as("sha256") // :191
       )
+    }
 
     // explore.R:199-221
-    val macros = m
-      .select(col("source_file"), explode(map_entries(col("m.macros"))).as("e"))
-      .select(
-        col("source_file"),
-        col("e.value.unique_id").as("unique_id"),
+    val macros = sectionRows(map_values(col("m.macros"))) { v =>
+      Seq(
+        v("unique_id").as("unique_id"),
         lit("macros").as("manifest_group"),
-        col("e.value.resource_type").as("resource_type"),
+        v("resource_type").as("resource_type"),
         nullStr.as("database"), // :206
         nullStr.as("schema"), // :207
-        col("e.value.name").as("name"),
-        col("e.value.description").as("description"),
+        v("name").as("name"),
+        v("description").as("description"),
         lit(null).cast("boolean").as("is_enabled"), // :210
         nullStr.as("materialized_as"), // :211
-        dependsOnCol(col("e.value.depends_on")).as("depends_on"),
+        dependsOnCol(v("depends_on")).as("depends_on"),
         emptyColumns.as("columns"), // :213
-        col("e.value.meta").as("meta"),
-        col("e.value.tags").as("tags"),
+        v("meta").as("meta"),
+        v("tags").as("tags"),
         // :216 — the reference hashes R's *serialization* of macro_sql
         // (digest::digest default), an R-specific value; we intentionally
         // diverge to the content hash of the raw bytes (SURVEY §2.1 X4).
-        sha2(col("e.value.macro_sql"), 256).as("sha256")
+        sha2(v("macro_sql"), 256).as("sha256")
       )
+    }
 
-    nodes
-      .unionByName(sources, allowMissingColumns = true) // bind_rows :246-250
-      .unionByName(macros, allowMissingColumns = true)
+    raw
+      .select(from_json(col("value"), manifestSchema).as("m") +: keep.map(col): _*)
+      .select(keep.map(col) :+ inline(concat(nodes, sources, macros)): _*)
   }
 
   /** `import_catalog_json` (explore.R:35-65): nodes ∪ sources (each
@@ -240,18 +252,19 @@ object DbtArtifacts {
     )
 
   private def catalogFromParsed(c: DataFrame): DataFrame = {
-    def section(sectionCol: Column, group: String): DataFrame =
-      c.select(explode(map_entries(sectionCol)).as("e")) // absent section → NULL map → 0 rows
-        .select(
-          col("e.key").as("unique_id"),
+    def section(m: Column, group: String): Column =
+      sectionRows(map_entries(m)) { e => // absent section → NULL map → 0 rows
+        val md = e("value")("metadata")
+        Seq(
+          e("key").as("unique_id"),
           lit(group).as("manifest_group"),
-          col("e.value.metadata.database").as("database"),
-          col("e.value.metadata.schema").as("schema"),
-          col("e.value.metadata.name").as("name"),
-          col("e.value.metadata.type").as("materialized_as"),
+          md("database").as("database"),
+          md("schema").as("schema"),
+          md("name").as("name"),
+          md("type").as("materialized_as"),
           coalesce(
             transform(
-              map_values(col("e.value.columns")),
+              map_values(e("value")("columns")),
               x =>
                 struct(
                   x.getField("name").as("column_name"),
@@ -262,9 +275,9 @@ object DbtArtifacts {
             array().cast(catalogColumnsOutType)
           ).as("columns")
         )
+      }
 
-    section(col("c.nodes"), "nodes")
-      .unionByName(section(col("c.sources"), "sources"))
+    c.select(inline(concat(section(col("c.nodes"), "nodes"), section(col("c.sources"), "sources"))))
   }
 
   /** Raw `sources.json` view (explore.R:279-282 loads it untransformed;

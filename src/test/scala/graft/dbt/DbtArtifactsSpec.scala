@@ -1,6 +1,13 @@
 package graft.dbt
 
-import org.apache.spark.sql.Row
+import java.nio.file.{Files, Path}
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 
@@ -18,18 +25,84 @@ class DbtArtifactsSpec extends AnyFunSuite with SparkSpec {
       .map("%02x".format(_))
       .mkString
 
+  // The readers' output schemas, nullability included: `inline` takes
+  // each column's nullability from the struct fields of the concatenated
+  // sections, so a change in any one section's projection shows here.
+  private val dependsOnOut = ArrayType(
+    StructType(Seq(StructField("type", StringType), StructField("unique_id", StringType))))
+  private val manifestColumnsOut = ArrayType(
+    StructType(Seq(
+      StructField("name", StringType),
+      StructField("description", StringType),
+      StructField("data_type", StringType),
+      StructField("meta", MapType(StringType, StringType)),
+      StructField("tags", ArrayType(StringType)))))
+  private val manifestOut = StructType(Seq(
+    StructField("unique_id", StringType),
+    StructField("manifest_group", StringType, nullable = false),
+    StructField("resource_type", StringType),
+    StructField("database", StringType),
+    StructField("schema", StringType),
+    StructField("name", StringType),
+    StructField("description", StringType),
+    StructField("is_enabled", BooleanType),
+    StructField("materialized_as", StringType),
+    StructField("depends_on", dependsOnOut, nullable = false),
+    StructField("columns", manifestColumnsOut, nullable = false),
+    StructField("meta", MapType(StringType, StringType)),
+    StructField("tags", ArrayType(StringType)),
+    StructField("sha256", StringType)))
+  private val catalogOut = StructType(Seq(
+    StructField("unique_id", StringType, nullable = false),
+    StructField("manifest_group", StringType, nullable = false),
+    StructField("database", StringType),
+    StructField("schema", StringType),
+    StructField("name", StringType),
+    StructField("materialized_as", StringType),
+    StructField("columns", ArrayType(StructType(Seq(
+      StructField("column_name", StringType),
+      StructField("ordinal_position", IntegerType),
+      StructField("data_type", StringType)))), nullable = false)))
+
   test("manifest: schema matches SURVEY §1.5") {
-    val df = DbtArtifacts.readManifest(spark, s"$dir/manifest.json")
+    assert(DbtArtifacts.readManifest(spark, s"$dir/manifest.json").schema == manifestOut)
+  }
+
+  test("output schemas are pinned: names, types and nullability") {
+    val raw = (f: String) => spark.read.option("wholetext", "true").text(s"$dir/$f")
+    assert(DbtArtifacts.readManifestUnsorted(spark, s"$dir/manifest.json").schema == manifestOut)
+    assert(DbtArtifacts.readManifest(raw("manifest.json")).schema == manifestOut)
     assert(
-      df.schema.fieldNames.toSeq == Seq(
-        "unique_id", "manifest_group", "resource_type", "database", "schema",
-        "name", "description", "is_enabled", "materialized_as", "depends_on",
-        "columns", "meta", "tags", "sha256"
-      )
+      DbtArtifacts.readManifestAll(spark, s"$dir/manifest*.json").schema ==
+        StructType(StructField("source_file", StringType, nullable = false) +: manifestOut.fields))
+    assert(DbtArtifacts.readCatalog(spark, s"$dir/catalog.json").schema == catalogOut)
+    assert(DbtArtifacts.readCatalog(raw("catalog.json")).schema == catalogOut)
+  }
+
+  /** Executes `df`, then counts the file scans, `from_json` calls and
+    * exchanges of its final physical plan (adaptive stages included).
+    * Plan nodes, not jobs: the count does not depend on how AQE splits
+    * the work. */
+  private def planShape(df: DataFrame): (Int, Int, Int) = {
+    df.collect()
+    val nodes = new AdaptiveSparkPlanHelper {
+      def all(p: SparkPlan): Seq[SparkPlan] = collect(p) { case n => n }
+    }.all(df.queryExecution.executedPlan)
+    (
+      nodes.count(_.isInstanceOf[FileSourceScanExec]),
+      nodes.flatMap(_.expressions).map(_.collect { case j: JsonToStructs => j }.size).sum,
+      nodes.count(_.isInstanceOf[Exchange])
     )
-    assert(df.schema("is_enabled").dataType.typeName == "boolean")
-    assert(df.schema("depends_on").dataType == ArtifactSchemas.dependsOnOutType)
-    assert(df.schema("columns").dataType == ArtifactSchemas.manifestColumnsOutType)
+  }
+
+  test("each artifact is scanned and parsed once per plan") {
+    // one file: one scan, one from_json, sorted inside its one partition
+    assert(planShape(DbtArtifacts.readManifest(spark, s"$dir/manifest.json")) == ((1, 1, 0)))
+    assert(planShape(DbtArtifacts.readManifestUnsorted(spark, s"$dir/manifest.json")) == ((1, 1, 0)))
+    assert(planShape(DbtArtifacts.readCatalog(spark, s"$dir/catalog.json")) == ((1, 1, 0)))
+    // a glob keeps the distributed sort; its scan still feeds one parse
+    val (scans, parses, _) = planShape(DbtArtifacts.readManifestAll(spark, s"$dir/manifest*.json"))
+    assert((scans, parses) == ((1, 1)))
   }
 
   test("manifest: rows = |nodes| + |sources| + |macros|, NULLS-LAST sort order") {
@@ -171,6 +244,32 @@ class DbtArtifactsSpec extends AnyFunSuite with SparkSpec {
     assert(byFile.keySet == Set("manifest.json", "manifest_v2.json"))
     assert(byFile("manifest.json").length == 4)
     assert(byFile("manifest_v2.json").length == 4) // 2 nodes + 1 source + 1 macro
+  }
+
+  test("multi-file ingestion: absent, NULL and corrupt sections drop only their own rows") {
+    val tmp = Files.createTempDirectory("dbt_fleet")
+    def write(name: String, json: String): Path = Files.writeString(tmp.resolve(name), json)
+    val macros = """"macros": {"macro.p.m": {"unique_id": "macro.p.m", "resource_type": "macro",
+      "name": "m", "depends_on": {"macros": []}, "macro_sql": "select 2"}}"""
+    Files.copy(java.nio.file.Paths.get(s"$dir/manifest.json"), tmp.resolve("a_full.json"))
+    write("b_macros_only.json", s"{$macros}")
+    write(
+      "c_sources_null.json",
+      s"""{"nodes": {"model.p.x": {"unique_id": "model.p.x", "resource_type": "model",
+         "name": "x"}}, "sources": null, $macros}"""
+    )
+    write("d_corrupt.json", """{"nodes": {"a": """)
+
+    val rows = DbtArtifacts.readManifestAll(spark, s"$tmp/*.json").collect()
+    val idsByFile = rows
+      .groupBy(_.getAs[String]("source_file").split('/').last)
+      .map { case (f, rs) => f -> rs.map(_.getAs[String]("unique_id")).toSeq }
+    assert(idsByFile == Map(
+      "a_full.json" -> Seq(
+        "macro.proj.m1", "model.proj.orders", "source.proj.raw.orders", "test.proj.not_null"),
+      "b_macros_only.json" -> Seq("macro.p.m"),
+      "c_sources_null.json" -> Seq("macro.p.m", "model.p.x")
+    ))
   }
 
   test("input dispatch: missing artifact fails fast; section introspection") {
