@@ -1,13 +1,16 @@
 package graft.dbt
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** Derived operators over the normalized manifest view — the queries a
   * dbt-artifact consumer actually runs (lineage, impact analysis,
-  * change detection). All inputs are `readManifest` outputs, so these
-  * compose at fleet scale: edges and diffs are plain shuffle joins on
-  * `unique_id`.
+  * change detection). All inputs are `readManifest` outputs. Diffs are
+  * shuffle joins on `unique_id`; graph searches run inside tasks over a
+  * broadcast edge list (`boundedBfs`).
   */
 object ManifestOps {
 
@@ -19,52 +22,19 @@ object ManifestOps {
       .select(col("unique_id").as("src"), explode(col("depends_on")).as("d"))
       .select(col("src"), col("d.type").as("dep_type"), col("d.unique_id").as("dst"))
 
-  /** Transitive dependency closure (src reaches dst in `hops` joins),
-    * bounded by `maxHops`, with early termination when a frontier adds
-    * nothing new. Classic iterative-join BFS: each hop is one
-    * distributed equi-join + anti-join dedup; the driver only sees a
-    * per-hop COUNT (a scalar), never edge data — the loop is control
-    * flow, not data movement. dbt graphs are shallow (hops ≤ ~20), so
-    * the bound is generous.
+  /** Transitive dependency closure: every (src, dst, hops) where src
+    * reaches dst in `hops` ≥ 1 edges (min hops), bounded by `maxHops`;
+    * every distinct edge is a hop-1 row. dbt graphs are shallow (hops
+    * ≤ ~20), so the bound is generous.
     */
-  def transitiveClosure(edges: DataFrame, maxHops: Int = 10): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).distinct().cache()
-    var paths = e.withColumn("hops", lit(1))
-    var frontier = paths
-    var hop = 1
-    while (hop < maxHops && !frontier.isEmpty) {
-      val next = frontier
-        .as("f")
-        // the static edge side is bounded by the manifest graph (node
-        // count, not path count) — broadcast it so each hop is a
-        // map-side join of the frontier, not a shuffle; the identical
-        // broadcast subplan is reused across hops. The frontier/paths
-        // sides stay distributed (path count can exceed node count).
-        .join(broadcast(e.as("n")), col("f.dst") === col("n.src"))
-        .select(col("f.src").as("src"), col("n.dst").as("dst"))
-        .distinct()
-        .withColumn("hops", lit(hop + 1))
-      // localCheckpoint (eager) both materializes the frontier and
-      // TRUNCATES its logical plan — without it every later iteration
-      // re-analyzes the whole accumulated lineage per action
-      frontier = next.join(paths.select("src", "dst"), Seq("src", "dst"), "left_anti").localCheckpoint()
-      paths = paths.unionByName(frontier)
-      hop += 1
-    }
-    // release the loop-lifetime edge cache instead of pinning a block
-    // per invocation for the whole session. Hop layers ≥ 2 are
-    // physically checkpointed; only the hops=1 layer re-derives the
-    // edge distinct once when the caller consumes the result.
-    e.unpersist(false)
-    paths
-  }
+  def transitiveClosure(edges: DataFrame, maxHops: Int = 10): DataFrame =
+    boundedBfs(edges, "src", "dst", None, maxHops).toDF("src", "dst", "hops")
 
   /** Impact analysis — the composite every dbt consumer runs after a
     * change lands: which entities must rebuild because something they
     * (transitively) depend on changed between two manifest snapshots?
     * Composes `diff` (what changed) with the reverse reachability of
-    * the AFTER graph's `transitiveClosure` (who reaches the changed
-    * node through depends_on edges).
+    * the AFTER graph (who reaches the changed node).
     */
   def impacted(before: DataFrame, after: DataFrame, maxHops: Int = 10): DataFrame = {
     val changed = diffUnsorted(before, after)
@@ -76,47 +46,75 @@ object ManifestOps {
   }
 
   /** Seeded reverse reachability: every (src, changed_id, hops) where
-    * `src` reaches a seed through depends_on edges in `hops` ≥ 1 joins
-    * (min hops — BFS discovery order). Equivalent to filtering the full
-    * transitive closure on dst ∈ seeds, but explores ONLY the impact
-    * cone: at fleet scale the full closure is O(V · avg-reach) while a
-    * change set touches a small cone of it. Same broadcast-edges loop
-    * shape as `transitiveClosure`.
+    * `src` reaches a seed through depends_on edges in `hops` ≥ 1 edges
+    * (min hops). Equivalent to filtering the full transitive closure on
+    * dst ∈ seeds, but searches ONLY the impact cone: at fleet scale the
+    * full closure is O(V · avg-reach) while a change set touches a
+    * small cone of it. A NULL `changed_id` matches no edge.
     */
-  def reverseReachable(edges: DataFrame, seeds: DataFrame, maxHops: Int = 10): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).distinct().cache()
-    // eager localCheckpoint: the seed set's lineage (two manifest
-    // parses + a full-outer diff) would otherwise be re-analyzed inside
-    // every iteration's plan
-    var frontier = e
-      .join(broadcast(seeds), e("dst") === seeds("changed_id"))
-      .select(col("src"), col("changed_id"))
-      .distinct()
-      .withColumn("hops", lit(1))
-      .localCheckpoint()
-    var paths = frontier
+  def reverseReachable(edges: DataFrame, seeds: DataFrame, maxHops: Int = 10): DataFrame =
+    boundedBfs(edges, "dst", "src", Some(seeds.select("changed_id")), maxHops)
+      .select(col("reached").as("src"), col("seed").as("changed_id"), col("hops"))
+
+  /** Bounded breadth-first search along edges `from` → `to` from each
+    * distinct seed (`None`: every `from` id): one (seed, reached, hops)
+    * row per node reached, at min hops; hop 1 always, hops ≤ `maxHops`.
+    * The edge list is collected in one job, deduplicated into an
+    * adjacency map and broadcast once; each task searches its seeds
+    * level by level, so the search is one pass whatever its depth and
+    * each seed's work is proportional to its cone. Memory bound: the
+    * distinct edge list (the graph's edge count, not its path count)
+    * must fit in the driver and in one executor.
+    *
+    * A seed's visited set starts empty: on a cycle it reaches itself at
+    * the cycle's length. A NULL id equals nothing (SQL `=`): no step
+    * expands through a NULL node and a given NULL seed matches no edge,
+    * but a NULL end of an edge is reported, and with `seeds = None` an
+    * edge with a NULL `from` is a hop-1 row whose `to` end is searched
+    * on (the DuckDB oracle's `SELECT src, dst, 1 FROM e`).
+    */
+  private def boundedBfs(
+      edges: DataFrame,
+      from: String,
+      to: String,
+      seeds: Option[DataFrame],
+      maxHops: Int
+  ): DataFrame = {
+    val spark = edges.sparkSession
+    val adjacency: Map[Any, Seq[Any]] = edges
+      .select(from, to)
+      .collect()
+      .groupMap(_.get(0))(_.get(1))
+      .map { case (k, v) => k -> v.distinct.toSeq }
+    val (seedField, seedIds) = seeds match {
+      case Some(df) => (df.schema.head, df.filter(col(df.columns.head).isNotNull).distinct())
+      case None =>
+        val field = edges.schema(from)
+        (field, spark.createDataFrame(adjacency.keys.map(Row(_)).toSeq.asJava, StructType(Seq(field))))
+    }
+    val out = StructType(
+      Seq(
+        seedField.copy(name = "seed"),
+        edges.schema(to).copy(name = "reached"),
+        StructField("hops", IntegerType, nullable = false)
+      )
+    )
+    val adj = spark.sparkContext.broadcast(adjacency)
+    seedIds.mapPartitions(_.flatMap(r => searchFrom(adj.value, r.get(0), maxHops)))(Encoders.row(out))
+  }
+
+  private def searchFrom(adj: Map[Any, Seq[Any]], seed: Any, maxHops: Int): Iterator[Row] = {
+    val seen = mutable.HashSet.empty[Any]
+    val out = mutable.ArrayBuffer.empty[Row]
+    var level = adj.getOrElse(seed, Nil)
     var hop = 1
-    while (hop < maxHops && !frontier.isEmpty) {
-      // broadcast the static edge side (same shape as transitiveClosure):
-      // the frontier is the cone-scaled side and must stay distributed;
-      // without the hint the planner may broadcast the frontier or
-      // shuffle the edges every hop once sizes cross the threshold
-      val next = broadcast(e.as("n"))
-        .join(frontier.as("f"), col("n.dst") === col("f.src"))
-        .select(col("n.src").as("src"), col("f.changed_id").as("changed_id"))
-        .distinct()
-        .withColumn("hops", lit(hop + 1))
-      frontier = next
-        .join(paths.select("src", "changed_id"), Seq("src", "changed_id"), "left_anti")
-        .localCheckpoint()
-      paths = paths.unionByName(frontier)
+    while (level.nonEmpty) {
+      val fresh = level.filter(seen.add)
+      fresh.foreach(n => out += Row(seed, n, hop))
+      level = if (hop >= maxHops) Nil else fresh.filter(_ != null).flatMap(adj.getOrElse(_, Nil))
       hop += 1
     }
-    // every frontier layer is physically checkpointed, so the cached
-    // edge list is no longer needed by the returned plan — release it
-    // rather than leaving a session-lifetime block per invocation
-    e.unpersist(false)
-    paths
+    out.iterator
   }
 
   /** Incremental upsert — dbt's incremental-materialization primitive:

@@ -147,9 +147,9 @@ object Dbt {
          UNION ALL ${edgeBranchSql("macros", "nodes")})
        SELECT DISTINCT src, dst FROM edges"""
 
-  /** BFS transitive closure with shortest hop count — matches
-    * ManifestOps.transitiveClosure's frontier iteration (first
-    * discovery = min hops). */
+  /** Recursive-CTE transitive closure with shortest hop count — the
+    * oracle for ManifestOps.transitiveClosure's per-source breadth-first
+    * search (first discovery = min hops; a NULL id joins nothing). */
   private def closureSql(edges: String, maxHops: Int = 10): String =
     s"""WITH RECURSIVE e(src, dst) AS ($edges),
        paths(src, dst, hops) AS (
@@ -412,8 +412,8 @@ object Dbt {
     ),
     // Same closure, stated as SQL: Spark 4.1's WITH RECURSIVE planned by
     // Catalyst (UnionLoop), oracle'd against DuckDB's recursive CTE —
-    // cross-checks the iterative DataFrame implementation above through
-    // a completely different execution path.
+    // cross-checks the breadth-first search of the DataFrame
+    // implementation above through a completely different execution path.
     QueryDef(
       "dbt_closure_recursive",
       (s, _) => {
@@ -423,12 +423,13 @@ object Dbt {
           .createOrReplaceTempView("lineage_edges_rc")
         // Spark 4.1 rejects UNION (distinct) in recursive CTEs
         // (UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE), so unlike the DuckDB
-        // oracle's UNION and the iterative implementation's per-frontier
-        // anti-join dedup, this recursion enumerates every distinct PATH
-        // — exponential on chained-diamond DAGs. Output is identical
-        // (min(hops) collapses paths) and the hop bound caps the blowup,
-        // but for deep/diamond-heavy graphs at scale prefer
-        // ManifestOps.transitiveClosure, which dedups each frontier.
+        // oracle's UNION and the breadth-first search's visited set,
+        // this recursion enumerates every distinct PATH — exponential on
+        // chained-diamond DAGs. Output is identical (min(hops) collapses
+        // paths) and the hop bound caps the blowup, but for
+        // deep/diamond-heavy graphs at scale prefer
+        // ManifestOps.transitiveClosure, which visits each node once
+        // per source.
         s.sql("""WITH RECURSIVE paths(src, dst, hops) AS (
             SELECT src, dst, 1 FROM lineage_edges_rc
             UNION ALL

@@ -3961,18 +3961,29 @@ object Versioned {
           "days probe cut nothing"
         )
         val truncPruned =
-          TableVersions.readVersionTransformPruned(s, ndir, nhead, "event_id", "200", "499")
+          TableVersions.readVersionTransformPruned(s, ndir, nhead, "event_id", "800", "1499")
         val truncSeg = "/__t_trunc1000_event_id=(-?\\d+)/".r
-        // the admissible bucket window derives from the transform (the
-        // same floor math the pruner uses), not a hard-coded literal —
-        // [bucket(lo), bucket(hi)] is exact for monotone transforms
-        val (bLo, bHi) = (200L / 1000L * 1000L, 499L / 1000L * 1000L)
-        val cutBuckets = truncPruned.inputFiles.toSeq
+        def truncBuckets(df: org.apache.spark.sql.DataFrame) = df.inputFiles.toSeq
           .flatMap(f => truncSeg.findFirstMatchIn(f).map(_.group(1).toLong))
           .distinct
+          .sorted
+        // the admissible bucket window derives from the transform (the
+        // same floor math the pruner uses), not a hard-coded literal —
+        // [bucket(lo), bucket(hi)] is exact for monotone transforms, so
+        // the cut must be exactly the live buckets inside it
+        val (bLo, bHi) = (800L / 1000L * 1000L, 1499L / 1000L * 1000L)
+        val cutBuckets = truncBuckets(truncPruned)
+        val liveBuckets = truncBuckets(TableVersions.readVersion(s, ndir, nhead))
         require(
-          cutBuckets.nonEmpty && cutBuckets.forall(b => b >= bLo && b <= bHi),
-          s"trunc cut leaked buckets: $cutBuckets"
+          cutBuckets.nonEmpty && cutBuckets == liveBuckets.filter(b => b >= bLo && b <= bHi),
+          s"trunc cut $cutBuckets is not the live buckets in [$bLo, $bHi] of $liveBuckets"
+        )
+        // the probe [800, 1499] straddles the bucket boundary at 1000:
+        // wherever the table reaches the upper bucket (every scale but
+        // sf0.001, whose ids stop at 999) the cut must cross it
+        require(
+          cutBuckets.length >= 2 || liveBuckets.forall(_ < bHi),
+          s"trunc cut does not span two buckets: $cutBuckets"
         )
 
         val days = daysPruned
@@ -4037,7 +4048,7 @@ object Versioned {
           GROUP BY 2
           UNION ALL
           SELECT 'trunc', event_type, count(*), CAST(sum(event_id) AS BIGINT)
-          FROM e WHERE event_id BETWEEN 200 AND 499 GROUP BY 2
+          FROM e WHERE event_id BETWEEN 800 AND 1499 GROUP BY 2
           UNION ALL
           SELECT 'census', event_type, count(*), CAST(sum(event_id) AS BIGINT)
           FROM e GROUP BY 2)
