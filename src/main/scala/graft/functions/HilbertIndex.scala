@@ -10,10 +10,11 @@ import org.apache.spark.sql.SparkSessionExtensions
 /** The n-dimensional Hilbert d-index (Skilling's transform,
   * "Programming the Hilbert curve", AIP Conf. Proc. 707, 2004) as ONE
   * native integer loop — bit-identical to the nested
-  * `aggregate`/`transform` HOF formulation it replaces
-  * (`TableVersions.hilbertNdExpr`): the same inverse-undo pass per bit
-  * level, the same Gray decode across axes, the same parity fold, the
-  * same interleave (axis 0 most significant at every level).
+  * `aggregate`/`transform` HOF formulation it replaces (kept as the
+  * spec's reference, `HilbertReference.hilbertNdExpr` in src/test):
+  * the same inverse-undo pass per bit level, the same Gray decode
+  * across axes, the same parity fold, the same interleave (axis 0 most
+  * significant at every level).
   *
   * Why an expression: Spark's higher-order functions evaluate
   * interpreted with one closure dispatch and one ArrayData allocation
@@ -33,7 +34,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 object HilbertCompute {
 
   /** The 2-D iterative xy2d walk — bit-identical to
-    * `TableVersions.hilbertExpr`'s struct fold (same quadrant rotation,
+    * the reference `HilbertReference.hilbertExpr`'s struct fold (same quadrant rotation,
     * same masking of the bits below the current level). */
   def compute2(x0: Long, y0: Long, bits: Int): Long = {
     var x = x0

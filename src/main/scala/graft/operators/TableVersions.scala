@@ -29,13 +29,17 @@ import org.apache.spark.sql.functions._
   *
   * Writes go through the Hadoop FileSystem API (HDFS/object-store
   * ready, same discipline as IvfIndex.compact). CONCURRENT WRITERS
-  * FAIL SAFE: every commit first claims its version number with an
+  * FAIL SAFE: every commit claims its version number with an
   * exclusive-create on `_log/_claims/v<V>` (the filesystem's
   * compare-and-swap — atomic on HDFS and local; on an object store
   * the same protocol maps to a conditional `If-None-Match` put), so
   * two writers racing to the same version produce exactly one commit
-  * and one loud [[ConcurrentCommitException]] — never a merged or
-  * corrupted log. A crashed commit can strand its claim;
+  * — never a merged or corrupted log. Appends and the log-only
+  * commits claim first; every rewriting commit computes and stages
+  * first, then claims and validates the rivals that landed since its
+  * snapshot ([[claimValidated]]): a disjoint rival rebases, an
+  * overlapping one fails safe with a loud
+  * [[ConcurrentCommitException]]. A killed JVM can strand a claim;
   * [[releaseStaleClaim]] removes a claim only when its log directory
   * never materialized.
   */
@@ -54,21 +58,11 @@ object TableVersions {
     * (scheme + authority + path) — `toUri.getPath` would strip
     * `s3a://bucket` down to a bare `/...` and the log would resolve to
     * wrong paths on any non-local filesystem. Both log writes and the
-    * `input_file_name()` hits in [[rewriteWhere]] normalize through
-    * here so string equality is meaningful.
+    * rewrites' hit files ([[hitFiles]]) normalize through here so
+    * string equality is meaningful.
     */
   private def qualified(s: SparkSession, p: Path): String =
     fsOf(s, p.toString).makeQualified(p).toString
-
-  private def listParquet(s: SparkSession, batchDir: String): Seq[String] = {
-    val fs = fsOf(s, batchDir)
-    fs.listStatus(new Path(batchDir))
-      .toSeq
-      .map(_.getPath)
-      .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-      .map(p => qualified(s, p))
-      .sorted
-  }
 
   private def logDir(dir: String) = s"$dir/_log"
   private def ckptDir(dir: String) = s"$dir/_ckpt"
@@ -265,15 +259,16 @@ object TableVersions {
     finally r.close()
   }
 
-  /** Atomically claim `version` at the START of a commit — BEFORE any
-    * data or log write: an exclusive `create` of
+  /** Atomically claim `version` BEFORE the commit's log write (an
+    * append claims before writing its batch; a rewrite after staging
+    * its outputs — [[claimValidated]]): an exclusive `create` of
     * `_log/_claims/v<version>` succeeds for exactly ONE writer (the
     * `_`-prefixed directory is invisible to the log's parquet reads).
     * The directory-existence check in the parquet writes alone is
     * check-then-act — two racing writers can both pass the check; the
-    * exclusive create is the atomic arbiter, and claiming first means
-    * the LOSER writes nothing at all (no orphan batch directory to
-    * block its retry). Claims are never deleted on success (empty
+    * exclusive create is the atomic arbiter, and the LOSER writes
+    * nothing under the version (no orphan batch directory to block
+    * its retry). Claims are never deleted on success (empty
     * files, one per commit — the same O(commits) footprint as the log
     * itself).
     */
@@ -658,45 +653,56 @@ object TableVersions {
     * precisely because a blind append COMMUTES with every concurrent
     * commit — it reads no snapshot and writes only fresh files, so
     * landing at a later version changes nothing it wrote. (Rewriting
-    * commits — delete/update/merge/optimize — must NOT blind-retry:
+    * commits — delete/update/merge/optimize — cannot blind-retry:
     * their file sets were resolved against a snapshot a rival may
-    * have invalidated; they keep the fail-safe contract and the
-    * caller re-executes from the new head.) The retry loop is
-    * claim-only — the loser of each round has written NO data — and
-    * each round's candidate version moves past both the observed head
-    * and every version it already lost, so a stranded claim (crashed
-    * rival) cannot livelock it. With N appenders racing, each commit
-    * costs at most N-1 extra empty-file creates — the textbook
-    * conditional-put OCC loop, no locks held anywhere.
+    * have invalidated. They stage first and VALIDATE every rival in
+    * [[claimValidated]]: a disjoint rival rebases, a real overlap fails
+    * safe and the caller re-executes from the new head.) The retry
+    * loop ([[claimNext]]) is claim-only — the loser of each round has
+    * written NO data — and each round's candidate version moves past
+    * both the observed head and every version it already lost, so a
+    * stranded claim (crashed rival) cannot livelock it. With N
+    * appenders racing, each commit costs at most N-1 extra empty-file
+    * creates — the textbook conditional-put OCC loop, no locks held
+    * anywhere.
     */
-  def commitAppendRetry(df: DataFrame, dir: String, maxAttempts: Int = 64): Long = {
+  def commitAppendRetry(df: DataFrame, dir: String): Long = {
     val s = df.sparkSession
     enforceConstraints(df, dir, "append")
-    var candidate = currentVersion(s, dir) + 1
+    val v = claimNext(s, dir, "append", currentVersion(s, dir) + 1)
+    val batch = s"$dir/data/b$v"
+    df.write.mode("errorifexists").parquet(batch)
+    appendLog(s, dir, v, if (v == 0) "init" else "append", listParquet(s, batch), Nil)
+    v
+  }
+
+  /** Version races one commit may lose before it gives up — the blind
+    * append's retry loop and every rewrite's claim loop. A lost race
+    * costs one empty-file create, never data. */
+  private val MaxClaimAttempts = 64
+
+  /** How long a rewrite waits for a rival's claimed version to
+    * materialize its log before treating it as crashed. */
+  private val RivalLogPollMs = 5000L
+
+  /** Claim the first free version at or above `from`: each lost race
+    * moves past the observed head AND past the version just lost, so
+    * stranded claims are stepped over, not spun on. Gives up with
+    * [[ConcurrentCommitException]] after [[MaxClaimAttempts]] losses. */
+  private def claimNext(s: SparkSession, dir: String, op: String, from: Long): Long = {
+    var candidate = from
     var attempt = 1
     while (true) {
       try {
         claimVersion(s, dir, candidate)
-        val batch = s"$dir/data/b$candidate"
-        df.write.mode("errorifexists").parquet(batch)
-        appendLog(
-          s,
-          dir,
-          candidate,
-          if (candidate == 0) "init" else "append",
-          listParquet(s, batch),
-          Nil
-        )
         return candidate
       } catch {
         case e: ConcurrentCommitException =>
-          if (attempt >= maxAttempts)
+          if (attempt >= MaxClaimAttempts)
             throw new ConcurrentCommitException(
-              s"append to $dir lost $maxAttempts version races — giving up (${e.getMessage})"
+              s"$op on $dir lost $MaxClaimAttempts version races — giving up (${e.getMessage})"
             )
           attempt += 1
-          // past the head AND past every claim this loop already lost —
-          // stranded claims are stepped over, not spun on
           candidate = math.max(currentVersion(s, dir) + 1, candidate + 1)
       }
     }
@@ -742,7 +748,7 @@ object TableVersions {
     * actually hit, not the table. `cond` is a SQL predicate string.
     */
   def commitDelete(s: SparkSession, dir: String, cond: String): Long =
-    rewriteWhere(s, dir, cond, identity, "delete")
+    rewriteCow(s, dir, Where(cond), None)
 
   /** Copy-on-write delete of an arbitrary KEY SET, fully distributed —
     * the data-scaled sibling of [[commitDelete]], whose SQL-predicate
@@ -751,68 +757,12 @@ object TableVersions {
     * IN-list on the driver, the exact shape this engine bans. Hit
     * files come from a key-only LEFT SEMI join against the live table
     * (the [[commitMerge]] probe minus the insert arm); the survivors
-    * of each hit file from the complementary LEFT ANTI. The key set is
-    * deduplicated and PINNED (`localCheckpoint`) before any file is
-    * rewritten — `keys` may lawfully derive from the very table being
-    * deleted from, and a lazy re-read mid-rewrite would see the
-    * half-written state. NULL keys are rejected loudly: SQL join
-    * semantics would silently never match them, turning "delete these
-    * keys" into "delete some of these keys". Cost: one table⋈keys
-    * probe + O(hit files) rewrite; nothing key-scaled ever touches the
-    * driver.
+    * of each hit file from the complementary LEFT ANTI. Cost: one
+    * table⋈keys probe + O(hit files) rewrite; nothing key-scaled ever
+    * touches the driver.
     */
-  /** Loud NULL-key guard shared by the key-set delete paths: SQL join
-    * semantics silently never match a NULL key, which would turn
-    * "delete these keys" into "delete some of these keys". */
-  private def requireNoNullKeys(keys: DataFrame, key: String): Unit = {
-    val stats = keys.agg(count(lit(1)).as("n"), count(col(key)).as("nn")).head()
-    require(
-      stats.getLong(0) == stats.getLong(1),
-      s"delete key set has ${stats.getLong(0) - stats.getLong(1)} NULL $key keys — " +
-        "NULL never matches a join, so those rows would silently survive; resolve them explicitly"
-    )
-  }
-
-  def commitDeleteKeys(keys: DataFrame, dir: String, key: String): Long = {
-    val s = keys.sparkSession
-    val prev = currentVersion(s, dir)
-    require(prev >= 0, s"$dir not initialized")
-    requireNoNullKeys(keys, key)
-    val v = prev + 1
-    claimVersion(s, dir, v)
-    val keySet = keys.select(col(key)).distinct().localCheckpoint()
-    val adds = liveFileAdds(s, dir, prev)
-    // mergeSchema + DVs applied, for rewriteWhere's reasons: an evolved
-    // table rewrites under the union schema; a MOR-deleted row must
-    // neither match nor resurrect
-    val withFile = applyDv(s, dir, prev, adds, readMerged(s, adds.map(_._1)), keepMeta = true)
-      .withColumn("__file", col("__dv_file"))
-    val hit = withFile
-      .join(keySet, Seq(key), "left_semi")
-      .select("__file")
-      .distinct()
-      .collect() // file paths — metadata-scale, never key-scale
-      .map(r => qualified(s, new Path(r.getString(0))))
-      .toSet
-    if (hit.isEmpty) {
-      appendLog(s, dir, v, "delete", Nil, Nil)
-      return v
-    }
-    val hitAdds = adds.filter(a => hit.contains(a._1))
-    // keep side + CDF pre-images both read the hit files — once
-    val hitDf = applyDv(s, dir, prev, hitAdds, readMerged(s, hit.toSeq.sorted)).cache()
-    try {
-      val keep = hitDf.join(keySet, Seq(key), "left_anti")
-      val cdf = hitDf
-        .join(keySet, Seq(key), "left_semi")
-        .withColumn("_change_type", lit("delete"))
-      writeCdf(s, dir, v, cdf)
-      val batch = s"$dir/data/b$v"
-      keep.write.mode("errorifexists").parquet(batch)
-      appendLog(s, dir, v, "delete", listParquet(s, batch), hit.toSeq.sorted)
-    } finally hitDf.unpersist(false)
-    v
-  }
+  def commitDeleteKeys(keys: DataFrame, dir: String, key: String): Long =
+    withKeySet(keys, key)(m => rewriteCow(keys.sparkSession, dir, m, None))
 
   /** Copy-on-write update: matching rows are transformed, the rest of
     * each hit file is preserved verbatim. `transform` receives ONLY
@@ -824,21 +774,84 @@ object TableVersions {
       cond: String,
       transform: DataFrame => DataFrame
   ): Long =
-    rewriteWhere(s, dir, cond, transform, "update")
+    rewriteCow(s, dir, Where(cond), Some(transform))
 
-  private def rewriteWhere(
+  /** What a rewrite matches — the one argument the copy-on-write and
+    * merge-on-read kernels ([[rewriteCow]], [[deleteMor]]) and the merge
+    * take to find hit rows, keep their exact complement, and probe a
+    * rival's added rows for ones this commit should have matched. */
+  private[graft] sealed trait Match {
+    def rows(df: DataFrame): DataFrame
+    def rest(df: DataFrame): DataFrame
+    /** What a rival's matching added rows are, for the conflict message. */
+    def clash(op: String): String
+  }
+
+  /** The rows where SQL predicate `cond` is TRUE. NULL evaluations
+    * (NULLs in predicate columns) count as non-matching, and the keep
+    * side is the exact complement: `not(cond)` alone would ALSO drop
+    * NULL-evaluating rows, silently losing them from the rewritten
+    * file. */
+  private[graft] final case class Where(cond: String) extends Match {
+    private def matches = coalesce(expr(cond), lit(false))
+    def rows(df: DataFrame): DataFrame = df.filter(matches)
+    def rest(df: DataFrame): DataFrame = df.filter(!matches)
+    def clash(op: String): String = s"added rows matching this $op's predicate"
+  }
+
+  /** The rows whose `key` is in `keys`, a key-only frame without
+    * duplicates or NULLs — LEFT SEMI / LEFT ANTI joins, so only keys
+    * shuffle, never row payloads. */
+  private[graft] final case class InKeys(keys: DataFrame, key: String) extends Match {
+    def rows(df: DataFrame): DataFrame = df.join(keys, Seq(key), "left_semi")
+    def rest(df: DataFrame): DataFrame = df.join(keys, Seq(key), "left_anti")
+    def clash(op: String): String =
+      s"added rows carrying keys this $op ${if (op == "merge") "replaces" else "deletes"}"
+  }
+
+  /** Run a key-set delete on the deduplicated key set of `keys`, cached
+    * for the commit: the NULL guard's pass fills the cache, so the
+    * caller's key plan runs once. `keys` may lawfully derive from the
+    * very table being deleted from; nothing is published before the
+    * rewrite is staged and the table's files are immutable, so a
+    * recompute on eviction sees the same keys. NULL keys are rejected
+    * loudly: SQL join semantics silently never match them, which would
+    * turn "delete these keys" into "delete some of these keys". */
+  private[graft] def withKeySet(keys: DataFrame, key: String)(delete: Match => Long): Long = {
+    val keySet = keys.select(col(key)).distinct().cache()
+    try {
+      val stats = keySet.agg(count(lit(1)), count(col(key))).head()
+      require(
+        stats.getLong(0) == stats.getLong(1),
+        s"delete key set has NULL $key keys — NULL never matches a join, so those rows " +
+          "would silently survive; resolve them explicitly"
+      )
+      delete(InKeys(keySet, key))
+    } finally keySet.unpersist(false)
+  }
+
+  /** The copy-on-write kernel behind [[commitDelete]],
+    * [[commitUpdate]] and [[commitDeleteKeys]]: the files holding
+    * matched rows are rewritten without them — or, with `update`,
+    * with `update(matched)` in their place (CHECK constraints are
+    * enforced on those post-images before anything is staged). The
+    * change feed carries the matched pre-images (and the post-images
+    * of an update). Resolved and staged against the head with no claim
+    * held, landed through [[claimValidated]]; a no-match commit is a
+    * recorded no-op version. `rivalLogPollMs` and `beforeClaim` are
+    * the claim-window test seam. */
+  private[graft] def rewriteCow(
       s: SparkSession,
       dir: String,
-      cond: String,
-      transform: DataFrame => DataFrame,
-      op: String
+      m: Match,
+      update: Option[DataFrame => DataFrame],
+      rivalLogPollMs: Long = RivalLogPollMs,
+      beforeClaim: () => Unit = () => ()
   ): Long = {
+    val op = if (update.isEmpty) "delete" else "update"
     val prev = currentVersion(s, dir)
     require(prev >= 0, s"$dir not initialized")
-    val v = prev + 1
-    claimVersion(s, dir, v)
     val adds = liveFileAdds(s, dir, prev)
-    val files = adds.map(_._1)
     // mergeSchema: a rewrite on an EVOLVED table must see the union
     // schema (a plain read would adopt one arbitrary file's schema and
     // silently drop the added column from the rewritten rows); the
@@ -846,75 +859,50 @@ object TableVersions {
     // doubles as gradual physical schema migration. DVs applied: a
     // merge-on-read-deleted row must neither match nor re-land in the
     // rewritten batch (it would resurrect).
-    val withFile = applyDv(s, dir, prev, adds, readMerged(s, files), keepMeta = true)
-      .withColumn("__file", col("__dv_file"))
-    // a row "matches" iff the predicate is TRUE — NULL evaluations
-    // (NULLs in predicate columns) count as non-matching, and the
-    // keep-side must be the exact complement: `not(cond)` alone would
-    // ALSO drop NULL-evaluating rows, silently losing them from the
-    // rewritten file
-    val matches = coalesce(expr(cond), lit(false))
-    // files containing at least one matching row — the rewrite set
-    val hit = withFile
-      .filter(matches)
-      .select("__file")
-      .distinct()
-      .collect()
-      .map(r => qualified(s, new Path(r.getString(0))))
-      .toSet
-    if (hit.isEmpty) {
-      // no-op commit: still advances the version (an auditable entry)
-      appendLog(s, dir, v, op, Nil, Nil)
-      return v
-    }
-    val hitAdds = adds.filter(a => hit.contains(a._1))
+    val hit = hitFiles(
+      s,
+      m.rows(applyDv(s, dir, prev, adds, readMerged(s, adds.map(_._1)), keepMeta = true))
+    )
     // the hit files feed the keep side, the matched pre-images, and
     // (for updates) the transform — cached so the parquet read + DV
     // anti-join runs once per commit instead of once per consumer
     // (guide §2.4/§5); recompute on eviction re-reads the same
     // immutable file paths
-    val hitDf = applyDv(s, dir, prev, hitAdds, readMerged(s, hit.toSeq.sorted)).cache()
+    val hitDf =
+      if (hit.isEmpty) None
+      else
+        Some(applyDv(s, dir, prev, adds.filter(a => hit(a._1)), readMerged(s, hit.toSeq.sorted)).cache())
     try {
-      val keep = hitDf.filter(!matches)
-      val replaced = op match {
-        case "delete" => keep
-        case _        => keep.unionByName(transform(hitDf.filter(matches)))
+      claimValidated(s, dir, op, prev, hit.toSeq.sorted, Some(m), Set.empty, rivalLogPollMs, beforeClaim) {
+        st =>
+          hitDf.foreach { df =>
+            val matched = m.rows(df)
+            val post = update.map(_(matched))
+            post.foreach(enforceConstraints(_, dir, op))
+            val cdf = post match {
+              case None => matched.withColumn("_change_type", lit("delete"))
+              case Some(p) =>
+                matched
+                  .withColumn("_change_type", lit("update_preimage"))
+                  .unionByName(p.withColumn("_change_type", lit("update_postimage")))
+            }
+            cdf.write.mode("errorifexists").parquet(st.cdf)
+            post.foldLeft(m.rest(df))(_ unionByName _).write.mode("errorifexists").parquet(st.batch)
+          }
       }
-      // update post-images must satisfy the CHECK constraints (deletes
-      // cannot add rows); a refusal releases this commit's version claim
-      // (the log never materialized, so the release is exact) and leaves
-      // the table byte-identical
-      if (op != "delete") {
-        try enforceConstraints(transform(hitDf.filter(matches)), dir, op)
-        catch {
-          case e: Throwable =>
-            releaseStaleClaim(s, dir, v)
-            throw e
-        }
-      }
-      // change-data feed: the matched rows ARE the commit's change set —
-      // persist them (O(matched)) so feed consumers never re-diff the
-      // table. Update commits carry pre- AND post-images, Delta's CDF
-      // row types.
-      val cdf = op match {
-        case "delete" =>
-          hitDf.filter(matches).withColumn("_change_type", lit("delete"))
-        case _ =>
-          hitDf
-            .filter(matches)
-            .withColumn("_change_type", lit("update_preimage"))
-            .unionByName(
-              transform(hitDf.filter(matches))
-                .withColumn("_change_type", lit("update_postimage"))
-            )
-      }
-      writeCdf(s, dir, v, cdf)
-      val batch = s"$dir/data/b$v"
-      replaced.write.mode("errorifexists").parquet(batch)
-      appendLog(s, dir, v, op, listParquet(s, batch), hit.toSeq.sorted)
-    } finally hitDf.unpersist(false)
-    v
+    } finally hitDf.foreach(_.unpersist(false))
   }
+
+  /** The files (in the log's path form) that `rows` — a read carrying
+    * [[applyDv]]'s `__dv_file` — come from: a distinct file list,
+    * metadata-scale, collected to the driver. */
+  private def hitFiles(s: SparkSession, rows: DataFrame): Set[String] =
+    rows
+      .select("__dv_file")
+      .distinct()
+      .collect()
+      .map(r => qualified(s, new Path(r.getString(0))))
+      .toSet
 
   /** One committed version's log entry: (op, adds, removes) — a
     * driver-side read of the version's tiny log file. */
@@ -928,244 +916,166 @@ object TableVersions {
     )
   }
 
-  /** CONFLICT-CHECKED copy-on-write delete — two racing rewrites on
-    * disjoint data both land without manual retry; see
-    * [[rewriteWhereChecked]]. */
-  def commitDeleteChecked(s: SparkSession, dir: String, cond: String): Long =
-    rewriteWhereChecked(s, dir, cond, identity, "delete")
-
-  /** CONFLICT-CHECKED copy-on-write update; see
-    * [[rewriteWhereChecked]]. */
-  def commitUpdateChecked(
-      s: SparkSession,
-      dir: String,
-      cond: String,
-      transform: DataFrame => DataFrame
-  ): Long =
-    rewriteWhereChecked(s, dir, cond, transform, "update")
-
-  /** Copy-on-write rewrite with OPTIMISTIC conflict detection — the
-    * Delta-ConflictChecker half of the concurrency story that
-    * [[commitAppendRetry]]'s contract doc promised a caller would have
-    * to hand-roll: [[rewriteWhere]] claims its version BEFORE any work
-    * (losing a race costs nothing, but every lost race surfaces as
-    * [[ConcurrentCommitException]] and the CALLER re-executes), while
-    * this path computes FIRST against the head snapshot — hit-set
-    * resolution, the rewritten batch, the change rows, all staged
-    * under neutral names — and only then enters the claim loop. A
-    * rival commit that landed in between is read back from the log and
-    * VALIDATED instead of assumed fatal:
-    *
-    *   - a rival that REMOVED any file this rewrite resolved into its
-    *     hit set invalidates the computed batch (double-remove /
-    *     resurrection) → conflict;
-    *   - a rival merge-on-read delete whose deletion vector targets a
-    *     hit file would be silently undone by the replacement batch
-    *     (fresh adds anchor above the DV) → conflict;
-    *   - a rival that ADDED files is read back (O(rival's change), not
-    *     O(table)) and conflicts iff any added row MATCHES this
-    *     rewrite's predicate — rows the already-computed hit set
-    *     missed. Appends/rewrites whose rows all miss the predicate
-    *     commute with this rewrite and pass.
-    *
-    * Disjoint rivals therefore REBASE for free: the staged batch is
-    * renamed into place and logged at the later version — the final
-    * state is exactly serial execution, with zero recompute. A genuine
-    * overlap releases the claim, discards the staging, and throws
-    * [[ConcurrentCommitException]] naming the rival version — the
-    * fail-safe contract kept, now raised only when the snapshot was
-    * ACTUALLY invalidated. An in-flight rival (claimed, log not yet
-    * materialized) is polled briefly and then treated as a conflict —
-    * indistinguishable from a crash, same conservative call
-    * [[safeHead]] makes.
-    *
-    * At 100 TB this is what makes maintenance + CoW workloads
-    * concurrent instead of serial: an OPTIMIZE over cold partitions
-    * and a GDPR delete over one subject's files validate as disjoint
-    * and both land, and the validation costs O(rival log entry +
-    * rival change data) — never a table scan.
-    *
-    * `beforeClaim` is a test seam: it runs after the snapshot work is
-    * staged and before the claim loop — the exact window a rival
-    * commit exploits — so specs can interleave deterministically.
-    */
-  private[graft] def rewriteWhereChecked(
-      s: SparkSession,
-      dir: String,
-      cond: String,
-      transform: DataFrame => DataFrame,
-      op: String,
-      maxAttempts: Int = 16,
-      rivalLogPollMs: Long = 5000L,
-      beforeClaim: () => Unit = () => ()
-  ): Long = {
-    val prev = currentVersion(s, dir)
-    require(prev >= 0, s"$dir not initialized")
-    val fs = fsOf(s, dir)
-
-    // ---- compute phase: resolve + rewrite against snapshot `prev`,
-    // staged under neutral names, NO claim held ----
-    val adds = liveFileAdds(s, dir, prev)
-    val withFile = applyDv(s, dir, prev, adds, readMerged(s, adds.map(_._1)), keepMeta = true)
-      .withColumn("__file", col("__dv_file"))
-    val matches = coalesce(expr(cond), lit(false))
-    val hit = withFile
-      .filter(matches)
-      .select("__file")
-      .distinct()
-      .collect()
-      .map(r => qualified(s, new Path(r.getString(0))))
-      .toSet
-    val stageId = java.util.UUID.randomUUID().toString
-    val stagedBatch = new Path(s"$dir/data/stage-$stageId")
-    val stagedCdf = new Path(s"${cdfDir(dir)}/stage-$stageId")
-    if (hit.nonEmpty) {
-      val hitAdds = adds.filter(a => hit.contains(a._1))
-      val hitDf = applyDv(s, dir, prev, hitAdds, readMerged(s, hit.toSeq.sorted))
-      val keep = hitDf.filter(!matches)
-      val replaced = op match {
-        case "delete" => keep
-        case _        => keep.unionByName(transform(hitDf.filter(matches)))
-      }
-      if (op != "delete") enforceConstraints(transform(hitDf.filter(matches)), dir, op)
-      val cdf = op match {
-        case "delete" =>
-          hitDf.filter(matches).withColumn("_change_type", lit("delete"))
-        case _ =>
-          hitDf
-            .filter(matches)
-            .withColumn("_change_type", lit("update_preimage"))
-            .unionByName(
-              transform(hitDf.filter(matches))
-                .withColumn("_change_type", lit("update_postimage"))
-            )
-      }
-      cdf.write.mode("errorifexists").parquet(stagedCdf.toString)
-      replaced.write.mode("errorifexists").parquet(stagedBatch.toString)
-    }
-    beforeClaim()
-
-    def discardStaging(): Unit =
-      Seq(stagedBatch, stagedCdf).foreach { p =>
-        if (fs.exists(p)) fs.delete(p, /* recursive = */ true): Unit
-      }
-
-    claimValidated(
-      s,
-      dir,
-      op,
-      prev,
-      hit,
-      addsConflict = radds =>
-        if (radds.nonEmpty && !readMerged(s, radds).filter(matches).isEmpty)
-          Some("added rows matching this rewrite's predicate")
-        else None,
-      discard = () => discardStaging(),
-      maxAttempts,
-      rivalLogPollMs
-    ) { (candidate, failSafe) =>
-      // validated: publish the staged work under the claimed version
-      if (hit.isEmpty) {
-        appendLog(s, dir, candidate, op, Nil, Nil)
-      } else {
-        val batch = s"$dir/data/b$candidate"
-        if (!fs.rename(stagedBatch, new Path(batch)))
-          failSafe(s"failed to publish staged batch $stagedBatch")
-        if (!fs.rename(stagedCdf, new Path(s"${cdfDir(dir)}/v$candidate")))
-          failSafe(s"failed to publish staged change feed $stagedCdf")
-        appendLog(s, dir, candidate, op, listParquet(s, batch), hit.toSeq.sorted)
-      }
-    }
+  /** Where one rewrite stages its outputs: neutral `stage-<uuid>`
+    * directories beside the layout each publishes into — the DV's
+    * under `_dvstage`, NOT `_dv`: readers fold the whole DV directory,
+    * and a version-less fragment there would break every concurrent
+    * read. [[sweepStagedOrphans]] clears what a killed JVM strands. */
+  private final class Staged(dir: String) {
+    private val id = java.util.UUID.randomUUID().toString
+    val batch = s"$dir/data/stage-$id"
+    val cdf = s"${cdfDir(dir)}/stage-$id"
+    val dv = s"$dir/_dvstage/stage-$id"
   }
 
-  /** The shared OCC commit loop for CHECKED (compute-first) commits:
-    * claim the next free version, WAIT for and VALIDATE every rival
-    * version in (prev, candidate) — structural conflicts (rival
-    * removed a file in this commit's hit set; rival deletion vector
-    * targets one) are checked here, op-specific semantic conflicts
-    * through the caller's `addsConflict` probe over a rival's added
-    * files — then run `publish` under the claimed version. Any
-    * conflict releases the claim, runs `discard`, and throws
-    * [[ConcurrentCommitException]]; the caller re-executes from the
-    * head. Returns the committed version. */
+  /** The ONE commit protocol of every rewriting commit — copy-on-write
+    * delete/update ([[rewriteCow]]), merge-on-read delete
+    * ([[deleteMor]]), merge ([[mergeUpsert]]) and the maintenance
+    * rewrites ([[rewriteFiles]]) — the Delta-ConflictChecker pattern.
+    * Blind appends and the log-only commits (restore, column mapping,
+    * clone) still claim first: they read no snapshot a rival could
+    * invalidate.
+    *
+    *  1. COMPUTE with no claim held: the caller has resolved its work
+    *     against snapshot `prev`; `stage` writes its outputs (batch,
+    *     change rows, deletion vector) under [[Staged]]'s neutral
+    *     names. Any failure here discards the staging and rethrows —
+    *     the table is untouched and the next writer unaffected.
+    *  2. CLAIM the next free version ([[claimNext]]).
+    *  3. VALIDATE every rival version in (prev, claimed), waiting up to
+    *     `rivalLogPollMs` for an in-flight one's log (a log that never
+    *     lands is indistinguishable from a crash and fails safe, the
+    *     same conservative call [[safeHead]] makes):
+    *     - a rival that REMOVED a file in `removes` or `dvTargets`
+    *       invalidates the staged work (double-remove / resurrection /
+    *       positions into a dead file) → conflict;
+    *     - a rival deletion vector on one of those files would be
+    *       silently undone by the replacement batch (fresh adds anchor
+    *       above the DV) or double-report change rows → conflict;
+    *     - a rival that ADDED files is read back (O(rival's change),
+    *       never O(table)) and conflicts iff any added row is one
+    *       `conflict` matches — a row the staged work missed. With no
+    *       `conflict` (a layout rewrite) every add commutes.
+    *  4. PUBLISH: rename the staging into place under the claimed
+    *     version (a DV staged for `prev + 1` is restamped only when the
+    *     commit rebased past it) and write the log entry: remove
+    *     `removes`, add the batch's files.
+    *
+    * Disjoint rivals therefore REBASE for free: the final state is
+    * exactly serial execution, with zero recompute. A conflict, or any
+    * failure after the claim, releases the claim, removes whatever was
+    * published, discards the staging and rethrows — a conflict as
+    * [[ConcurrentCommitException]] naming the rival version, after
+    * which the caller re-executes from the head. Returns the committed
+    * version.
+    */
   private def claimValidated(
       s: SparkSession,
       dir: String,
       op: String,
       prev: Long,
-      hit: Set[String],
-      addsConflict: Seq[String] => Option[String],
-      discard: () => Unit,
-      maxAttempts: Int,
-      rivalLogPollMs: Long
-  )(publish: (Long, String => Nothing) => Unit): Long = {
+      removes: Seq[String],
+      conflict: Option[Match] = None,
+      dvTargets: Set[String] = Set.empty,
+      rivalLogPollMs: Long = RivalLogPollMs,
+      beforeClaim: () => Unit = () => ()
+  )(stage: Staged => Unit): Long = {
     val fs = fsOf(s, dir)
+    val st = new Staged(dir)
+    def discard(): Unit =
+      Seq(st.batch, st.cdf, st.dv).map(new Path(_)).foreach { p =>
+        if (fs.exists(p)) fs.delete(p, /* recursive = */ true): Unit
+      }
+    val candidate =
+      try {
+        stage(st)
+        beforeClaim()
+        claimNext(s, dir, op, currentVersion(s, dir) + 1)
+      } catch {
+        case e: Throwable =>
+          discard()
+          throw e
+      }
+    val guarded = removes.toSet ++ dvTargets
     def conflictWith(w: Long): Option[String] = {
       val (rop, radds, rremoves) = logEntry(s, dir, w)
-      if (rremoves.toSet.intersect(hit).nonEmpty)
+      val rivalDv = s"${dvDir(dir)}/v$w"
+      if (rremoves.exists(guarded))
         Some(s"rival $rop at v$w removed files in this commit's hit set")
-      else if (rop == "mor_delete" && fs.exists(new Path(s"${dvDir(dir)}/v$w")) && {
+      else if (rop == "mor_delete" && fs.exists(new Path(rivalDv)) && {
           s.read
-            .parquet(s"${dvDir(dir)}/v$w")
+            .parquet(rivalDv)
             .select("file")
             .distinct()
             .collect()
-            .exists(r => hit.contains(qualified(s, new Path(r.getString(0)))))
+            .exists(r => guarded(qualified(s, new Path(r.getString(0)))))
         })
         Some(s"rival deletion vector at v$w targets files in this commit's hit set")
-      else if (radds.nonEmpty) addsConflict(radds).map(r => s"rival $rop at v$w $r")
-      else None
+      else
+        conflict
+          .filter(m => radds.nonEmpty && !m.rows(readMerged(s, radds)).isEmpty)
+          .map(m => s"rival $rop at v$w ${m.clash(op)}")
     }
-    var candidate = currentVersion(s, dir) + 1
-    var attempt = 1
-    while (true) {
-      val won =
-        try { claimVersion(s, dir, candidate); true }
-        catch {
-          case e: ConcurrentCommitException =>
-            if (attempt >= maxAttempts) {
-              discard()
-              throw new ConcurrentCommitException(
-                s"$op on $dir lost $maxAttempts version races — giving up (${e.getMessage})"
-              )
-            }
-            attempt += 1
-            candidate = math.max(currentVersion(s, dir) + 1, candidate + 1)
-            false
-        }
-      if (won) {
-        def failSafe(reason: String): Nothing = {
-          releaseStaleClaim(s, dir, candidate)
-          discard()
+    val logP = new Path(s"${logDir(dir)}/version=$candidate")
+    try {
+      ((prev + 1) until candidate).foreach { w =>
+        val rivalLog = new Path(s"${logDir(dir)}/version=$w")
+        val deadline = System.nanoTime() + rivalLogPollMs * 1000000L
+        while (!fs.exists(rivalLog) && System.nanoTime() < deadline) Thread.sleep(50L)
+        val reason =
+          if (!fs.exists(rivalLog)) Some(s"rival claim at v$w never committed (in flight or crashed)")
+          else conflictWith(w)
+        reason.foreach { r =>
           throw new ConcurrentCommitException(
-            s"$op on $dir (snapshot v$prev) conflicts: $reason — re-execute from the head"
+            s"$op on $dir (snapshot v$prev) conflicts: $r — re-execute from the head"
           )
         }
-        ((prev + 1) until candidate).foreach { w =>
-          // wait for an in-flight rival's log to materialize — an entry
-          // that never lands is indistinguishable from a crash and
-          // fails safe, the same conservative call safeHead makes
-          val logP = new Path(s"${logDir(dir)}/version=$w")
-          val deadline = System.nanoTime() + rivalLogPollMs * 1000000L
-          while (!fs.exists(logP) && System.nanoTime() < deadline) Thread.sleep(50L)
-          if (!fs.exists(logP))
-            failSafe(s"rival claim at v$w never committed (in flight or crashed)")
-          conflictWith(w).foreach(failSafe)
-        }
-        publish(candidate, failSafe)
-        return candidate
       }
+      // rename a staged output into place; false when nothing was staged
+      def publish(from: String, to: String): Boolean = {
+        val staged = fs.exists(new Path(from))
+        if (staged && !fs.rename(new Path(from), new Path(to)))
+          throw new java.io.IOException(s"failed to publish staged $from -> $to")
+        staged
+      }
+      val batch = s"$dir/data/b$candidate"
+      val added = if (publish(st.batch, batch)) listParquet(s, batch) else Nil
+      publish(st.cdf, s"${cdfDir(dir)}/v$candidate"): Unit
+      val dv = s"${dvDir(dir)}/v$candidate"
+      if (fs.exists(new Path(st.dv))) {
+        if (candidate == prev + 1) {
+          fs.mkdirs(new Path(dvDir(dir)))
+          publish(st.dv, dv): Unit
+        } else {
+          // rebased: applicability reads the COMMITTED version, so the
+          // staged stamp is rewritten — O(matched), one file, unlike
+          // re-resolving the positions
+          s.read
+            .parquet(st.dv)
+            .withColumn("dv_version", lit(candidate))
+            .coalesce(1)
+            .write
+            .mode("errorifexists")
+            .parquet(dv)
+          fs.delete(new Path(st.dv), /* recursive = */ true): Unit
+        }
+      }
+      appendLog(s, dir, candidate, op, added, removes)
+      candidate
+    } catch {
+      case e: Throwable if !fs.exists(logP) =>
+        // the log never materialized: the version is free again, with
+        // whatever was published under it removed
+        releaseStaleClaim(s, dir, candidate)
+        discard()
+        throw e
     }
-    -1L // unreachable
   }
 
+  /** Where each commit's change rows (data columns + `_change_type`)
+    * land, as `v<V>` — the CHANGE-DATA-FEED segments feed consumers read
+    * instead of diffing two table versions ([[changesFeed]]). */
   private def cdfDir(dir: String) = s"$dir/_cdf"
-
-  /** Persist one commit's change rows (data columns + `_change_type`)
-    * — the CHANGE-DATA-FEED segment feed consumers read instead of
-    * diffing two table versions ([[changesFeed]]). O(changed rows). */
-  private def writeCdf(s: SparkSession, dir: String, v: Long, rows: DataFrame): Unit =
-    rows.write.mode("errorifexists").parquet(s"${cdfDir(dir)}/v$v")
 
   // ------------------------------------------------------------------
   // Merge-on-read deletes: positional DELETION VECTORS (the public
@@ -1210,94 +1120,23 @@ object TableVersions {
     * content). An empty match is a recorded no-op commit. Commit cost:
     * one DV parquet of (file, pos, dv_version) rows — O(matched),
     * never O(hit files). */
-  def commitDeleteMor(s: SparkSession, dir: String, cond: String): Long = {
-    val prev = currentVersion(s, dir)
-    require(prev >= 0, s"$dir not initialized")
-    val v = prev + 1
-    claimVersion(s, dir, v)
-    val adds = liveFileAdds(s, dir, prev)
-    val matches = coalesce(expr(cond), lit(false))
-    val matched = applyDv(s, dir, prev, adds, readMerged(s, adds.map(_._1)), keepMeta = true)
-      .filter(matches)
-      .localCheckpoint()
-    val hits = matched
-      .select(
-        canonPathCol(col("__dv_file")).as("file"),
-        col("__dv_pos").as("pos"),
-        lit(v).as("dv_version")
-      )
-    if (matched.isEmpty) {
-      appendLog(s, dir, v, "mor_delete", Nil, Nil)
-      return v
-    }
-    // change-data feed: the matched pre-images, same as a CoW delete.
-    // CDF segment and DV are disjoint outputs of the pinned matched
-    // frame — concurrent jobs (guide §2.6)
-    Concurrently.run(
-      () =>
-        writeCdf(
-          s,
-          dir,
-          v,
-          matched.drop("__dv_file", "__dv_pos").withColumn("_change_type", lit("delete"))
-        ),
-      () => hits.coalesce(1).write.mode("errorifexists").parquet(s"${dvDir(dir)}/v$v")
-    )
-    appendLog(s, dir, v, "mor_delete", Nil, Nil)
-    v
-  }
+  def commitDeleteMor(s: SparkSession, dir: String, cond: String): Long =
+    deleteMor(s, dir, Where(cond))
 
   /** Merge-on-read delete of an arbitrary KEY SET — [[commitDeleteMor]]
     * with the predicate replaced by a key-only LEFT SEMI join, for the
     * same reason [[commitDeleteKeys]] exists beside [[commitDelete]]:
     * the predicate contract is request-scaled, and a data-scaled key
     * set must reach the matcher as a DataFrame, never as a collected
-    * IN-list. Same DV output shape; the key set is deduplicated and
-    * pinned before positions resolve. */
-  def commitDeleteMorKeys(keys: DataFrame, dir: String, key: String): Long = {
-    val s = keys.sparkSession
-    val prev = currentVersion(s, dir)
-    require(prev >= 0, s"$dir not initialized")
-    requireNoNullKeys(keys, key)
-    val v = prev + 1
-    claimVersion(s, dir, v)
-    val keySet = keys.select(col(key)).distinct().localCheckpoint()
-    val adds = liveFileAdds(s, dir, prev)
-    val matched = applyDv(s, dir, prev, adds, readMerged(s, adds.map(_._1)), keepMeta = true)
-      .join(keySet, Seq(key), "left_semi")
-      .localCheckpoint()
-    val hits = matched
-      .select(
-        canonPathCol(col("__dv_file")).as("file"),
-        col("__dv_pos").as("pos"),
-        lit(v).as("dv_version")
-      )
-    if (matched.isEmpty) {
-      appendLog(s, dir, v, "mor_delete", Nil, Nil)
-      return v
-    }
-    Concurrently.run(
-      () =>
-        writeCdf(
-          s,
-          dir,
-          v,
-          matched.drop("__dv_file", "__dv_pos").withColumn("_change_type", lit("delete"))
-        ),
-      () => hits.coalesce(1).write.mode("errorifexists").parquet(s"${dvDir(dir)}/v$v")
-    )
-    appendLog(s, dir, v, "mor_delete", Nil, Nil)
-    v
-  }
+    * IN-list. Same DV output shape. */
+  def commitDeleteMorKeys(keys: DataFrame, dir: String, key: String): Long =
+    withKeySet(keys, key)(m => deleteMor(keys.sparkSession, dir, m))
 
-  /** Merge-on-read DELETE with OPTIMISTIC conflict detection — the
-    * [[rewriteWhereChecked]] protocol extended to the DV path, closing
-    * the round-13 gap where [[commitDeleteMor]] blind-failed on any
-    * version race. Compute first against the head snapshot (matched
-    * positions and the change rows staged under neutral names, no
-    * claim held), then enter the shared [[claimValidated]] loop. The
-    * conflict rules follow from what a deletion vector MEANS —
-    * positions into a specific file at a specific anchor:
+  /** The merge-on-read kernel: matched positions and change rows are
+    * resolved against the head and staged with no claim held, then land
+    * through [[claimValidated]]. The conflict rules follow from what a
+    * deletion vector MEANS — positions into a specific file at a
+    * specific anchor:
     *
     *   - a rival that REMOVED any file this DV targets invalidates the
     *     positions outright (the file is gone or its rows were
@@ -1309,103 +1148,57 @@ object TableVersions {
     *     masks could double-report change rows → conflict — but two
     *     writers DV-deleting DIFFERENT files commute and both land;
     *   - a rival that ADDED files conflicts iff any added row matches
-    *     this delete's predicate (rows the staged DV cannot reach).
+    *     (rows the staged DV cannot reach).
     *
-    * Disjoint rivals therefore rebase for free: the staged DV is
-    * published at the later version with its `dv_version` stamped at
-    * publish time (DV applicability anchors on the COMMITTED version,
-    * so the stamp must be the claimed one, not the snapshot guess) —
-    * final state identical to serial execution, zero recompute. */
-  def commitDeleteMorChecked(
+    * Disjoint rivals therefore rebase: the DV is staged with
+    * `dv_version = prev + 1` and renamed into place when the commit
+    * lands there; only a rebase rewrites it under the claimed version
+    * (DV applicability anchors on the COMMITTED version) — final state
+    * identical to serial execution, no positions re-resolved. */
+  private[graft] def deleteMor(
       s: SparkSession,
       dir: String,
-      cond: String,
-      maxAttempts: Int = 16,
-      rivalLogPollMs: Long = 5000L,
+      m: Match,
+      rivalLogPollMs: Long = RivalLogPollMs,
       beforeClaim: () => Unit = () => ()
   ): Long = {
     val prev = currentVersion(s, dir)
     require(prev >= 0, s"$dir not initialized")
-    val fs = fsOf(s, dir)
-
-    // ---- compute phase: resolve matched positions at snapshot `prev`,
-    // staged under neutral names, NO claim held ----
     val adds = liveFileAdds(s, dir, prev)
-    val matches = coalesce(expr(cond), lit(false))
-    val matched = applyDv(s, dir, prev, adds, readMerged(s, adds.map(_._1)), keepMeta = true)
-      .filter(matches)
-      .localCheckpoint()
-    val hit = matched
-      .select(canonPathCol(col("__dv_file")).as("file"))
-      .distinct()
-      .collect()
-      .map(r => qualified(s, new Path(r.getString(0))))
-      .toSet
-    val stageId = java.util.UUID.randomUUID().toString
-    // NOT under _dv: readers fold the whole DV directory, and a staged
-    // (version-less) fragment there would break every concurrent read
-    val stagedDv = new Path(s"$dir/_dvstage/stage-$stageId")
-    val stagedCdf = new Path(s"${cdfDir(dir)}/stage-$stageId")
-    if (hit.nonEmpty) {
-      // two disjoint outputs of the same pinned frame — concurrent
-      Concurrently.run(
-        () =>
-          matched
-            .select(canonPathCol(col("__dv_file")).as("file"), col("__dv_pos").as("pos"))
-            .coalesce(1)
-            .write
-            .mode("errorifexists")
-            .parquet(stagedDv.toString),
-        () =>
-          matched
-            .drop("__dv_file", "__dv_pos")
-            .withColumn("_change_type", lit("delete"))
-            .write
-            .mode("errorifexists")
-            .parquet(stagedCdf.toString)
-      )
-    }
-    beforeClaim()
-
-    def discardStaging(): Unit =
-      Seq(stagedDv, stagedCdf).foreach { p =>
-        if (fs.exists(p)) fs.delete(p, /* recursive = */ true): Unit
+    // the file probe, the DV and the change rows all read the matched
+    // rows: cached, and the probe fills the cache. A recompute on
+    // eviction re-reads the same immutable files at the same positions.
+    val matched =
+      m.rows(applyDv(s, dir, prev, adds, readMerged(s, adds.map(_._1)), keepMeta = true)).cache()
+    try {
+      val hit = hitFiles(s, matched)
+      claimValidated(s, dir, "mor_delete", prev, Nil, Some(m), hit, rivalLogPollMs, beforeClaim) {
+        st =>
+          // two disjoint outputs of the same cached frame — concurrent
+          // jobs (guide §2.6)
+          if (hit.nonEmpty)
+            Concurrently.run(
+              () =>
+                matched
+                  .select(
+                    canonPathCol(col("__dv_file")).as("file"),
+                    col("__dv_pos").as("pos"),
+                    lit(prev + 1).as("dv_version")
+                  )
+                  .coalesce(1)
+                  .write
+                  .mode("errorifexists")
+                  .parquet(st.dv),
+              () =>
+                matched
+                  .drop("__dv_file", "__dv_pos")
+                  .withColumn("_change_type", lit("delete"))
+                  .write
+                  .mode("errorifexists")
+                  .parquet(st.cdf)
+            )
       }
-
-    claimValidated(
-      s,
-      dir,
-      "mor_delete",
-      prev,
-      hit,
-      addsConflict = radds =>
-        if (radds.nonEmpty && !readMerged(s, radds).filter(matches).isEmpty)
-          Some("added rows matching this delete's predicate")
-        else None,
-      discard = () => discardStaging(),
-      maxAttempts,
-      rivalLogPollMs
-    ) { (candidate, failSafe) =>
-      if (hit.isEmpty) {
-        appendLog(s, dir, candidate, "mor_delete", Nil, Nil)
-      } else {
-        // dv_version is stamped at PUBLISH: applicability reads the
-        // committed version, and a rebase moved it past the snapshot
-        // guess. The DV is O(matched) and single-file — rewriting it
-        // here is metadata-scale, unlike re-resolving the positions.
-        s.read
-          .parquet(stagedDv.toString)
-          .withColumn("dv_version", lit(candidate))
-          .coalesce(1)
-          .write
-          .mode("errorifexists")
-          .parquet(s"${dvDir(dir)}/v$candidate")
-        if (!fs.rename(stagedCdf, new Path(s"${cdfDir(dir)}/v$candidate")))
-          failSafe(s"failed to publish staged change feed $stagedCdf")
-        fs.delete(stagedDv, /* recursive = */ true): Unit
-        appendLog(s, dir, candidate, "mor_delete", Nil, Nil)
-      }
-    }
+    } finally matched.unpersist(false)
   }
 
   /** The DV rows applicable when reading at `v`, given the live files'
@@ -1501,20 +1294,53 @@ object TableVersions {
     val prev = currentVersion(s, dir)
     require(prev >= 0, s"$dir not initialized")
     val adds = liveFileAdds(s, dir, prev)
-    val dv = dvApplicable(s, dir, prev, adds) match {
-      case None     => return prev
-      case Some(df) => df.localCheckpoint()
+    val affected = dvApplicable(s, dir, prev, adds) match {
+      case None     => Nil
+      case Some(dv) => dv.select("file").distinct().collect().map(_.getString(0)).toSeq.sorted
     }
-    val affected = dv.select("file").distinct().collect().map(_.getString(0)).toSeq.sorted
     if (affected.isEmpty) return prev
-    val v = prev + 1
-    claimVersion(s, dir, v)
-    val affectedAdds = adds.filter(a => affected.contains(a._1))
-    val survivors =
-      applyDv(s, dir, prev, affectedAdds, readMerged(s, affected))
-    val batch = s"$dir/data/b$v"
-    survivors.write.mode("errorifexists").parquet(batch)
-    appendLog(s, dir, v, "mor_compact", listParquet(s, batch), affected)
+    val survivors = liveRows(s, dir, prev, adds, affected)
+    rewriteFiles(s, dir, "mor_compact", prev, affected) { out =>
+      survivors.write.mode("errorifexists").parquet(out)
+    }
+  }
+
+  /** `files` as of version `prev` (`adds` are its live files with
+    * their add anchors), deletion vectors applied: a maintenance
+    * rewrite must not materialize a merge-on-read-deleted row into a
+    * fresh file whose add anchor would outrank its vector. mergeSchema,
+    * so files of different schema eras keep every column. */
+  private def liveRows(
+      s: SparkSession,
+      dir: String,
+      prev: Long,
+      adds: Seq[(String, Long)],
+      files: Seq[String]
+  ): DataFrame = {
+    val wanted = files.toSet
+    applyDv(s, dir, prev, adds.filter(a => wanted(a._1)), readMerged(s, files))
+  }
+
+  /** The shared commit of the maintenance rewrites ([[optimize]],
+    * [[compactMor]], [[optimizeBucketed]], [[optimizeTransformed]] and
+    * the z-order/Hilbert rewrites): `write` stages the replacement
+    * rows for `files` into the directory it is given, and the commit
+    * lands through [[claimValidated]] as `op` (remove `files`, add the
+    * replacements) with NO adds probe. A layout rewrite is a LOGICAL
+    * NO-OP over its inputs, so every rival that did not remove or
+    * deletion-vector one of them commutes and rebases — appends,
+    * rewrites of other files, even predicate deletes (their hit sets
+    * are disjoint from the inputs by the structural check). The
+    * skipping indexes are folded after the commit. */
+  private def rewriteFiles(
+      s: SparkSession,
+      dir: String,
+      op: String,
+      prev: Long,
+      files: Seq[String],
+      beforeClaim: () => Unit = () => ()
+  )(write: String => Unit): Long = {
+    val v = claimValidated(s, dir, op, prev, files, beforeClaim = beforeClaim)(st => write(st.batch))
     compactSkipping(s, dir)
     v
   }
@@ -1555,13 +1381,14 @@ object TableVersions {
       .partitionBy(partCols.map(c => s"__p_$c"): _*)
       .mode("errorifexists")
       .parquet(batch)
-    appendLog(s, dir, v, if (v == 0) "init" else "append", listParquetRec(s, batch), Nil)
+    appendLog(s, dir, v, if (v == 0) "init" else "append", listParquet(s, batch), Nil)
     v
   }
 
-  /** Recursive variant of [[listParquet]] for partitioned batch
-    * layouts (leaf files under `__p_<col>=<value>/` directories). */
-  private def listParquetRec(s: SparkSession, batchDir: String): Seq[String] = {
+  /** A batch directory's data files in the log's path form, sorted —
+    * recursively, since partitioned layouts put them under
+    * `__p_<col>=<value>/`, `__bucket=` or `__t_` directories. */
+  private def listParquet(s: SparkSession, batchDir: String): Seq[String] = {
     val fs = fsOf(s, batchDir)
     val it = fs.listFiles(new Path(batchDir), /* recursive = */ true)
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -1623,6 +1450,10 @@ object TableVersions {
 
   private val BucketSeg = ".*/__bucket=(\\d+)of(\\d+)/.*".r
 
+  /** A row's bucket directory value, `<pmod(hash(key), n)>of<n>`. */
+  private def bucketCol(key: String, nBuckets: Int): org.apache.spark.sql.Column =
+    concat(pmod(hash(col(key)), lit(nBuckets)).cast("string"), lit(s"of$nBuckets"))
+
   /** Commit a batch hash-bucketed on `key` into `nBuckets` directory
     * buckets. The hash is Spark's own `hash()` (Murmur3) over the
     * column's NATIVE type — probes must pass a literal of the same
@@ -1634,27 +1465,17 @@ object TableVersions {
     val v = currentVersion(s, dir) + 1
     claimVersion(s, dir, v)
     val batch = s"$dir/data/b$v"
-    df.withColumn(
-      "__bucket",
-      concat(pmod(hash(col(key)), lit(nBuckets)).cast("string"), lit(s"of$nBuckets"))
-    )
+    df.withColumn("__bucket", bucketCol(key, nBuckets))
       // one shuffle task per bucket → one file per bucket directory
       .repartition(nBuckets, col("__bucket"))
       .write
       .partitionBy("__bucket")
       .mode("errorifexists")
       .parquet(batch)
-    appendLog(s, dir, v, if (v == 0) "init" else "append", listParquetRec(s, batch), Nil)
+    appendLog(s, dir, v, if (v == 0) "init" else "append", listParquet(s, batch), Nil)
     v
   }
 
-  /** Equality read `key = value` pruned to the matching bucket of
-    * every bucketed commit (plus all unbucketed files — absence-safe).
-    * `value` must carry the key column's exact type: the probe hashes
-    * the literal the way the commit hashed the column, and
-    * `hash(42L) != hash(42)` != `hash("42")`. Deletion vectors apply
-    * inside, like every read path.
-    */
   /** OPTIMIZE for the bucketed layout: rewrite every live file that
     * does NOT conform to `__bucket=<b>of<nBuckets>` directories — flat
     * batches from copy-on-write rewrites, commits bucketed under a
@@ -1681,25 +1502,25 @@ object TableVersions {
       }
       .sorted
     if (nonConforming.isEmpty) return prev
-    val v = prev + 1
-    claimVersion(s, dir, v)
-    val doomed = nonConforming.toSet
-    val batch = s"$dir/data/b$v"
-    applyDv(s, dir, prev, adds.filter(a => doomed(a._1)), readMerged(s, nonConforming))
-      .withColumn(
-        "__bucket",
-        concat(pmod(hash(col(key)), lit(nBuckets)).cast("string"), lit(s"of$nBuckets"))
-      )
-      .repartition(nBuckets, col("__bucket"))
-      .write
-      .partitionBy("__bucket")
-      .mode("errorifexists")
-      .parquet(batch)
-    appendLog(s, dir, v, "optimize", listParquetRec(s, batch), nonConforming)
-    compactSkipping(s, dir)
-    v
+    val rows = liveRows(s, dir, prev, adds, nonConforming)
+    rewriteFiles(s, dir, "optimize", prev, nonConforming) { out =>
+      rows
+        .withColumn("__bucket", bucketCol(key, nBuckets))
+        .repartition(nBuckets, col("__bucket"))
+        .write
+        .partitionBy("__bucket")
+        .mode("errorifexists")
+        .parquet(out)
+    }
   }
 
+  /** Equality read `key = value` pruned to the matching bucket of
+    * every bucketed commit (plus all unbucketed files — absence-safe).
+    * `value` must carry the key column's exact type: the probe hashes
+    * the literal the way the commit hashed the column, and
+    * `hash(42L) != hash(42)` != `hash("42")`. Deletion vectors apply
+    * inside, like every read path.
+    */
   def readVersionByBucket(
       s: SparkSession,
       dir: String,
@@ -1828,7 +1649,7 @@ object TableVersions {
       .partitionBy(pcol)
       .mode("errorifexists")
       .parquet(batch)
-    appendLog(s, dir, v, if (v == 0) "init" else "append", listParquetRec(s, batch), Nil)
+    appendLog(s, dir, v, if (v == 0) "init" else "append", listParquet(s, batch), Nil)
     v
   }
 
@@ -1854,24 +1675,20 @@ object TableVersions {
     val want = s"/${transformPartCol(transform, c)}="
     val nonConforming = adds.map(_._1).filterNot(_.contains(want)).sorted
     if (nonConforming.isEmpty) return prev
-    val v = prev + 1
-    claimVersion(s, dir, v)
-    val doomed = nonConforming.toSet
-    val batch = s"$dir/data/b$v"
     val pcol = transformPartCol(transform, c)
-    applyDv(s, dir, prev, adds.filter(a => doomed(a._1)), readMerged(s, nonConforming))
-      .withColumn(pcol, transformExpr(transform, c))
-      // ~one output file per bucket; the pinned count keeps the
-      // rewrite shuffle-wide (AQE would coalesce a small rewrite to
-      // one task and serialize the per-bucket writer churn)
-      .repartition(s.sessionState.conf.numShufflePartitions, col(pcol))
-      .write
-      .partitionBy(pcol)
-      .mode("errorifexists")
-      .parquet(batch)
-    appendLog(s, dir, v, "optimize", listParquetRec(s, batch), nonConforming)
-    compactSkipping(s, dir)
-    v
+    val rows = liveRows(s, dir, prev, adds, nonConforming)
+    rewriteFiles(s, dir, "optimize", prev, nonConforming) { out =>
+      rows
+        .withColumn(pcol, transformExpr(transform, c))
+        // ~one output file per bucket; the pinned count keeps the
+        // rewrite shuffle-wide (AQE would coalesce a small rewrite to
+        // one task and serialize the per-bucket writer churn)
+        .repartition(s.sessionState.conf.numShufflePartitions, col(pcol))
+        .write
+        .partitionBy(pcol)
+        .mode("errorifexists")
+        .parquet(out)
+    }
   }
 
   /** [[readVersion]] restricted — at the LOG level, zero data or index
@@ -2350,33 +2167,46 @@ object TableVersions {
     * rows re-land in the new batch beside the whole source), so commit
     * cost scales with the data actually hit plus the source — the
     * Delta-style "find touched files via join, rewrite only those"
-    * plan. The touched-file probe is a key-only semi join: it shuffles
-    * (key, file) pairs, never row payloads. A source with duplicate
-    * keys is ambiguous (which row wins?) and fails loudly, matching
-    * the standard multiple-rows-matched MERGE error.
+    * plan. The touched-file probe is a key-only semi join ([[InKeys]]):
+    * it shuffles (key, file) pairs, never row payloads. A source with
+    * duplicate keys is ambiguous (which row wins?) and fails loudly,
+    * matching the standard multiple-rows-matched MERGE error.
     */
-  def commitMerge(source: DataFrame, dir: String, key: String): Long = {
+  def commitMerge(source: DataFrame, dir: String, key: String): Long =
+    mergeUpsert(source, dir, key)
+
+  /** [[commitMerge]]'s body: resolved and staged against the head with
+    * no claim held, landed through [[claimValidated]]. Rivals that
+    * landed in between rebase when they touched none of the hit files
+    * AND added no row carrying one of the source's keys (a rival-added
+    * row with a merged key is a row this merge should have replaced —
+    * fail safe); the key probe reads only the rival's change-scaled
+    * adds. `beforeClaim` is the claim-window test seam. */
+  private[graft] def mergeUpsert(
+      source: DataFrame,
+      dir: String,
+      key: String,
+      beforeClaim: () => Unit = () => ()
+  ): Long = {
     val s = source.sparkSession
     val prev = currentVersion(s, dir)
     require(prev >= 0, s"$dir not initialized")
-    val v = prev + 1
     val adds = liveFileAdds(s, dir, prev)
-    val files = adds.map(_._1)
-    // mergeSchema for the same reason as rewriteWhere: an evolved
+    // mergeSchema for the same reason as [[rewriteCow]]: an evolved
     // table's merge must align against the UNION schema; DVs applied
     // so deleted rows neither match nor survive into the rewrite
-    val withFile = applyDv(s, dir, prev, adds, readMerged(s, files), keepMeta = true)
-      .withColumn("__file", col("__dv_file"))
-    val targetCols =
-      withFile.columns.filterNot(Set("__file", "__dv_file", "__dv_pos")).toSeq
+    val target = applyDv(s, dir, prev, adds, readMerged(s, adds.map(_._1)), keepMeta = true)
+    val targetCols = target.columns.filterNot(Set("__dv_file", "__dv_pos")).toSeq
     // align the source to the target's column order so every data file
     // in the table carries one physical schema. CACHED: the caller's
-    // source plan is consumed by four separate actions (validation agg,
-    // hit probe, CDF write, batch write) — evaluating it per action
-    // paid the whole upstream plan (often a feed window + view read +
-    // groupBy) four times per commit (guide §2.4/§5); the validation
-    // agg below is the first action, so it populates the cache, and a
-    // recompute on eviction re-reads the same immutable inputs.
+    // source plan is consumed by the validation agg, the hit probe, the
+    // CDF and batch writes and any rival's key probe — evaluating it per
+    // action paid the whole upstream plan (often a feed window + view
+    // read + groupBy) once per consumer (guide §2.4/§5). The validation
+    // agg is the first action, so it fills the cache. A cache, not a
+    // localCheckpoint (one more eager job): the rival probe may run
+    // after rivals commit, but a recompute on eviction re-reads the same
+    // immutable files, so it sees the same rows.
     val alignedSource = source.select(targetCols.map(col): _*).cache()
     try {
       val dup = alignedSource
@@ -2394,160 +2224,42 @@ object TableVersions {
         s"merge source has duplicate keys: ${dup.getLong(1)} rows, ${dup.getLong(2)} distinct $key"
       )
       enforceConstraints(alignedSource, dir, "merge")
-      // claim only after the source validates — a rejected merge must
-      // not strand a version claim
-      claimVersion(s, dir, v)
-      val srcKeys = alignedSource.select(col(key))
-      val hit = withFile
-        .join(srcKeys, Seq(key), "left_semi")
-        .select("__file")
-        .distinct()
-        .collect()
-        .map(r => qualified(s, new Path(r.getString(0))))
-        .toSet
+      val m = InKeys(alignedSource.select(col(key)), key)
+      val hit = hitFiles(s, m.rows(target))
       // the hit files feed the keep side AND the CDF pre-images —
-      // cached so they are read (and DV-anti-joined) once, not three
-      // times; replaces the previous preImages localCheckpoint (one
-      // fewer eager job per commit)
+      // cached so they are read (and DV-anti-joined) once
       val hitRows =
         if (hit.isEmpty) None
         else
           Some(
-            applyDv(s, dir, prev, adds.filter(a => hit.contains(a._1)), readMerged(s, hit.toSeq.sorted))
+            applyDv(s, dir, prev, adds.filter(a => hit(a._1)), readMerged(s, hit.toSeq.sorted))
               .select(targetCols.map(col): _*)
               .cache()
           )
       try {
-        val replaced = hitRows
-          .map(_.join(srcKeys, Seq(key), "left_anti").unionByName(alignedSource))
-          .getOrElse(alignedSource)
-        // change-data feed: matched keys carry pre- and post-images, the
-        // rest of the source is inserts — O(source + matched)
-        val preImages = hitRows.map(_.join(srcKeys, Seq(key), "left_semi"))
-        val matchedKeys = preImages.map(_.select(col(key)))
-        val post = matchedKeys.map(mk =>
-          alignedSource.join(mk, Seq(key), "left_semi").withColumn("_change_type", lit("update_postimage"))
-        )
-        val inserts = matchedKeys
-          .map(mk => alignedSource.join(mk, Seq(key), "left_anti"))
-          .getOrElse(alignedSource)
-          .withColumn("_change_type", lit("insert"))
-        val cdf = (preImages.map(_.withColumn("_change_type", lit("update_preimage"))).toSeq ++
-          post.toSeq :+ inserts).reduce(_ unionByName _)
-        writeCdf(s, dir, v, cdf)
-        val batch = s"$dir/data/b$v"
-        replaced.write.mode("errorifexists").parquet(batch)
-        appendLog(s, dir, v, "merge", listParquet(s, batch), hit.toSeq.sorted)
+        claimValidated(s, dir, "merge", prev, hit.toSeq.sorted, Some(m), beforeClaim = beforeClaim) {
+          st =>
+            val replaced = hitRows.map(m.rest(_).unionByName(alignedSource)).getOrElse(alignedSource)
+            // change-data feed: matched keys carry pre- and post-images,
+            // the rest of the source is inserts — O(source + matched)
+            val preImages = hitRows.map(m.rows)
+            val matchedKeys = preImages.map(_.select(col(key)))
+            val post = matchedKeys.map(mk =>
+              alignedSource
+                .join(mk, Seq(key), "left_semi")
+                .withColumn("_change_type", lit("update_postimage"))
+            )
+            val inserts = matchedKeys
+              .map(mk => alignedSource.join(mk, Seq(key), "left_anti"))
+              .getOrElse(alignedSource)
+              .withColumn("_change_type", lit("insert"))
+            val cdf = (preImages.map(_.withColumn("_change_type", lit("update_preimage"))).toSeq ++
+              post.toSeq :+ inserts).reduce(_ unionByName _)
+            cdf.write.mode("errorifexists").parquet(st.cdf)
+            replaced.write.mode("errorifexists").parquet(st.batch)
+        }
       } finally hitRows.foreach(_.unpersist(false))
     } finally alignedSource.unpersist(false)
-    v
-  }
-
-  /** CONFLICT-CHECKED MERGE — [[commitMerge]]'s compute-first sibling
-    * on the [[claimValidated]] protocol (the same rebase-or-fail-safe
-    * contract as [[commitDeleteChecked]]): the upsert resolves and
-    * stages against the head snapshot with NO claim held; rivals that
-    * landed in between rebase for free when they touched none of this
-    * merge's hit files AND added no row carrying one of its KEYS (a
-    * rival-added row with a merged key is a row this merge should
-    * have replaced — fail safe); the key probe reads only the rival's
-    * change-scaled adds. `beforeClaim` is the same test seam. */
-  private[graft] def commitMergeChecked(
-      source: DataFrame,
-      dir: String,
-      key: String,
-      maxAttempts: Int = 16,
-      rivalLogPollMs: Long = 5000L,
-      beforeClaim: () => Unit = () => ()
-  ): Long = {
-    val s = source.sparkSession
-    val prev = currentVersion(s, dir)
-    require(prev >= 0, s"$dir not initialized")
-    val fs = fsOf(s, dir)
-    val adds = liveFileAdds(s, dir, prev)
-    val files = adds.map(_._1)
-    val withFile = applyDv(s, dir, prev, adds, readMerged(s, files), keepMeta = true)
-      .withColumn("__file", col("__dv_file"))
-    val targetCols =
-      withFile.columns.filterNot(Set("__file", "__dv_file", "__dv_pos")).toSeq
-    // ONE pinned evaluation of the caller's source plan (was: the dup
-    // agg, hit probe, staging writes, and the post-rival key probe each
-    // re-evaluated it). localCheckpoint, not cache: `srcKeys` is probed
-    // against RIVAL adds inside the claimValidated loop — after rivals
-    // commit — so the rows must be pinned, never recomputable from a
-    // table that has moved (the previous srcKeys checkpoint's rationale,
-    // now covering the whole aligned source).
-    val alignedSource = source.select(targetCols.map(col): _*).localCheckpoint()
-    val dup = alignedSource
-      .agg(count(lit(1)).as("n"), count(col(key)).as("nn"), countDistinct(col(key)).as("k"))
-      .head()
-    require(dup.getLong(0) == dup.getLong(1), s"merge source has NULL $key keys")
-    require(dup.getLong(1) == dup.getLong(2), "merge source has duplicate keys")
-    enforceConstraints(alignedSource, dir, "merge")
-    val srcKeys = alignedSource.select(col(key))
-    val hit = withFile
-      .join(srcKeys, Seq(key), "left_semi")
-      .select("__file")
-      .distinct()
-      .collect()
-      .map(r => qualified(s, new Path(r.getString(0))))
-      .toSet
-    // hit files feed the keep side and the CDF pre-images — read once
-    val hitRows =
-      if (hit.isEmpty) None
-      else
-        Some(
-          applyDv(s, dir, prev, adds.filter(a => hit.contains(a._1)), readMerged(s, hit.toSeq.sorted))
-            .select(targetCols.map(col): _*)
-            .cache()
-        )
-    val replaced = hitRows
-      .map(_.join(srcKeys, Seq(key), "left_anti").unionByName(alignedSource))
-      .getOrElse(alignedSource)
-    val preImages = hitRows.map(_.join(srcKeys, Seq(key), "left_semi"))
-    val matchedKeys = preImages.map(_.select(col(key)))
-    val post = matchedKeys.map(mk =>
-      alignedSource.join(mk, Seq(key), "left_semi").withColumn("_change_type", lit("update_postimage"))
-    )
-    val inserts = matchedKeys
-      .map(mk => alignedSource.join(mk, Seq(key), "left_anti"))
-      .getOrElse(alignedSource)
-      .withColumn("_change_type", lit("insert"))
-    val cdf = (preImages.map(_.withColumn("_change_type", lit("update_preimage"))).toSeq ++
-      post.toSeq :+ inserts).reduce(_ unionByName _)
-    val stageId = java.util.UUID.randomUUID().toString
-    val stagedBatch = new Path(s"$dir/data/stage-$stageId")
-    val stagedCdf = new Path(s"${cdfDir(dir)}/stage-$stageId")
-    try {
-      cdf.write.mode("errorifexists").parquet(stagedCdf.toString)
-      replaced.write.mode("errorifexists").parquet(stagedBatch.toString)
-    } finally hitRows.foreach(_.unpersist(false)) // staging done — only srcKeys outlives
-    beforeClaim()
-    def discardStaging(): Unit =
-      Seq(stagedBatch, stagedCdf).foreach { p =>
-        if (fs.exists(p)) fs.delete(p, /* recursive = */ true): Unit
-      }
-    claimValidated(
-      s,
-      dir,
-      "merge",
-      prev,
-      hit,
-      addsConflict = radds =>
-        if (!readMerged(s, radds).join(srcKeys, Seq(key), "left_semi").isEmpty)
-          Some("added rows carrying keys this merge replaces")
-        else None,
-      discard = () => discardStaging(),
-      maxAttempts,
-      rivalLogPollMs
-    ) { (candidate, failSafe) =>
-      val batch = s"$dir/data/b$candidate"
-      if (!fs.rename(stagedBatch, new Path(batch)))
-        failSafe(s"failed to publish staged batch $stagedBatch")
-      if (!fs.rename(stagedCdf, new Path(s"${cdfDir(dir)}/v$candidate")))
-        failSafe(s"failed to publish staged change feed $stagedCdf")
-      appendLog(s, dir, candidate, "merge", listParquet(s, batch), hit.toSeq.sorted)
-    }
   }
 
   /** Small-file compaction as a COMMIT (Delta OPTIMIZE): live files
@@ -2568,51 +2280,16 @@ object TableVersions {
       dir: String,
       smallBytes: Long = 128L * 1024 * 1024,
       targetBytes: Long = 128L * 1024 * 1024
-  ): Long = {
-    val prev = currentVersion(s, dir)
-    require(prev >= 0, s"$dir not initialized")
-    val fs = fsOf(s, dir)
-    val adds = liveFileAdds(s, dir, prev)
-    val sized = adds.map { case (f, _) => f -> fs.getFileStatus(new Path(f)).getLen }
-    val small = sized.filter(_._2 < smallBytes).map(_._1).sorted
-    if (small.size < 2) return prev
-    val v = prev + 1
-    claimVersion(s, dir, v)
-    val total = sized.filter(s => small.contains(s._1)).map(_._2).sum
-    val nOut = math.max(1L, (total + targetBytes - 1) / targetBytes).toInt
-    val batch = s"$dir/data/b$v"
-    // DVs applied: packing must not materialize merge-on-read-deleted
-    // rows into fresh files (whose add anchor would outrank the DV)
-    applyDv(s, dir, prev, adds.filter(a => small.contains(a._1)), s.read.parquet(small: _*))
-      .repartition(nOut)
-      .write
-      .mode("errorifexists")
-      .parquet(batch)
-    appendLog(s, dir, v, "optimize", listParquet(s, batch), small)
-    compactSkipping(s, dir)
-    v
-  }
+  ): Long = packSmallFiles(s, dir, smallBytes, targetBytes)
 
-  /** CONFLICT-CHECKED OPTIMIZE — compute-first small-file compaction
-    * on the [[claimValidated]] protocol, completing the checked
-    * family (delete/update/merge/optimize): the packed batch stages
-    * against the head snapshot with no claim held, and because a
-    * compaction is a LOGICAL NO-OP over its input files, EVERY rival
-    * that did not touch those inputs rebases for free — appends,
-    * other-file rewrites, even predicate-carrying deletes (their hit
-    * sets are disjoint from our inputs by the structural check); only
-    * a rival that removed or deletion-vectored one of the inputs
-    * invalidates the packed bytes and fails safe. This is the pairing
-    * the 100 TB brief actually needs: background OPTIMIZE and
-    * foreground governance deletes land concurrently instead of
-    * serializing. `beforeClaim` is the same test seam. */
-  private[graft] def optimizeChecked(
+  /** [[optimize]]'s body on [[rewriteFiles]]: a background compaction
+    * and a foreground delete of other files land concurrently instead
+    * of serializing. `beforeClaim` is the claim-window test seam. */
+  private[graft] def packSmallFiles(
       s: SparkSession,
       dir: String,
-      smallBytes: Long = 128L * 1024 * 1024,
-      targetBytes: Long = 128L * 1024 * 1024,
-      maxAttempts: Int = 16,
-      rivalLogPollMs: Long = 5000L,
+      smallBytes: Long,
+      targetBytes: Long,
       beforeClaim: () => Unit = () => ()
   ): Long = {
     val prev = currentVersion(s, dir)
@@ -2624,29 +2301,9 @@ object TableVersions {
     if (small.size < 2) return prev
     val total = sized.filter(s => small.contains(s._1)).map(_._2).sum
     val nOut = math.max(1L, (total + targetBytes - 1) / targetBytes).toInt
-    val stagedBatch = new Path(s"$dir/data/stage-${java.util.UUID.randomUUID()}")
-    applyDv(s, dir, prev, adds.filter(a => small.contains(a._1)), s.read.parquet(small: _*))
-      .repartition(nOut)
-      .write
-      .mode("errorifexists")
-      .parquet(stagedBatch.toString)
-    beforeClaim()
-    claimValidated(
-      s,
-      dir,
-      "optimize",
-      prev,
-      small.toSet,
-      addsConflict = _ => None, // a pure re-clustering commutes with any rival ADD
-      discard = () => { if (fs.exists(stagedBatch)) fs.delete(stagedBatch, true): Unit },
-      maxAttempts,
-      rivalLogPollMs
-    ) { (candidate, failSafe) =>
-      val batch = s"$dir/data/b$candidate"
-      if (!fs.rename(stagedBatch, new Path(batch)))
-        failSafe(s"failed to publish staged batch $stagedBatch")
-      appendLog(s, dir, candidate, "optimize", listParquet(s, batch), small)
-      compactSkipping(s, dir)
+    val rows = liveRows(s, dir, prev, adds, small)
+    rewriteFiles(s, dir, "optimize", prev, small, beforeClaim) { out =>
+      rows.repartition(nOut).write.mode("errorifexists").parquet(out)
     }
   }
 
@@ -2980,8 +2637,9 @@ object TableVersions {
     actions.toSeq
   }
 
-  /** Crashed CHECKED commits strand `stage-<uuid>` dirs under `data/`,
-    * `_cdf/`, and `_dvstage/` — never referenced by the log (readers
+  /** A rewrite killed mid-commit (its JVM gone, so it could not
+    * discard its own staging) strands `stage-<uuid>` dirs under
+    * `data/`, `_cdf/`, and `_dvstage/` — never referenced by the log (readers
     * resolve files through it), so correctness never needed this
     * sweep, but the garbage is otherwise unbounded (the same orphan
     * class [[CoveringIndex.maintain]] and the AsOfIndex purge close
@@ -3161,102 +2819,20 @@ object TableVersions {
     zorderRewrite(s, dir, cols, nOut, prev, subset)
   }
 
-  /** The shared z-order rewrite: cluster exactly `files` along the
-    * Morton curve and commit (remove `files`, add the replacements). */
-  /** HILBERT d-index (the standard iterative xy2d): walk bit levels
-    * top-down, accumulating the sub-square index and applying the
-    * quadrant rotation to (x, y) as a struct fold — O(bits) integer
-    * ops per row, compute-local, no UDF. Hilbert beats Morton on range
-    * locality (consecutive d values are always grid-adjacent — no
-    * curve-order jumps across quadrant boundaries), at the price of
-    * the rotation state that makes it 2-D-only here. Rotated
-    * coordinates are MASKED to the bits below the current level
-    * (future levels read only those; an unmasked `s-1-y` goes negative
-    * when higher bits are set and corrupts every later level).
-    * `sx`/`sy` are SQL expressions yielding non-negative bigints below
-    * 2^bits. Exposed for the spec's reference-implementation check. */
-  private[operators] def hilbertExpr(sx: String, sy: String, bits: Int): String =
-    s"""aggregate(
-          sequence(${bits - 1}, 0, -1),
-          named_struct('x', $sx, 'y', $sy, 'd', cast(0 AS bigint)),
-          (a, k) -> named_struct(
-            'x', CASE WHEN ((a.y >> k) & 1) = 0 AND ((a.x >> k) & 1) = 1
-                        THEN shiftleft(1L, k) - 1 - (a.y & (shiftleft(1L, k) - 1))
-                      WHEN ((a.y >> k) & 1) = 0
-                        THEN a.y & (shiftleft(1L, k) - 1)
-                      ELSE a.x END,
-            'y', CASE WHEN ((a.y >> k) & 1) = 0 AND ((a.x >> k) & 1) = 1
-                        THEN shiftleft(1L, k) - 1 - (a.x & (shiftleft(1L, k) - 1))
-                      WHEN ((a.y >> k) & 1) = 0
-                        THEN a.x & (shiftleft(1L, k) - 1)
-                      ELSE a.y END,
-            'd', a.d + shiftleft(1L, k) * shiftleft(1L, k)
-                   * ((3 * ((a.x >> k) & 1)) ^ ((a.y >> k) & 1))),
-          a -> a.d)"""
-
-  /** N-DIMENSIONAL Hilbert d-index — Skilling's transform
-    * ("Programming the Hilbert curve", AIP Conf. Proc. 707, 2004),
-    * which generalizes the 2-D rotation state to any dimension by
-    * working on the TRANSPOSED code: an inverse-undo pass per bit
-    * level (top-down), a Gray decode across axes, a parity fold, then
-    * the d-index is the plain bit-interleave of the transposed axes
-    * (axis 0 most significant at every level). All three passes are
-    * sequential folds with an array<bigint> accumulator — expressed as
-    * nested `aggregate`/`transform` HOFs, O(bits × n) integer ops per
-    * row, compute-local, no UDF (the same discipline as the 2-D
-    * [[hilbertExpr]], which stays the n = 2 fast path). Lambda
-    * variables are uniquely named per nesting level — shadowed names
-    * across nested HOF scopes are the one foot-gun here. `coords` are
-    * SQL expressions yielding non-negative bigints below 2^bits.
-    * HilbertCurveSpec pins bijection + unit-step adjacency on full 3-D
-    * and 4-D grids — any mis-derived pass fails unit-step. */
-  private[operators] def hilbertNdExpr(coords: Seq[String], bits: Int): String = {
-    val n = coords.size
-    require(n >= 2 && n <= 4, "the n-d Hilbert fold supports 2-4 columns")
-    val xs = coords.map(c => s"cast(($c) AS bigint)").mkString(", ")
-    // t = parity fold over the LAST transposed axis's bits
-    val tOfA =
-      s"""aggregate(sequence(${bits - 1}, 1, -1), cast(0 AS bigint),
-            (tt, qq) -> CASE WHEN (element_at(A2, $n) & shiftleft(1L, qq)) != 0
-                        THEN tt ^ (shiftleft(1L, qq) - 1) ELSE tt END)"""
-    s"""aggregate(
-          sequence(2, $n),
-          aggregate(
-            sequence(${bits - 1}, 1, -1),
-            array($xs),
-            (X1, k1) -> aggregate(
-              sequence(1, $n),
-              X1,
-              (A1, i1) -> CASE
-                WHEN (element_at(A1, i1) & shiftleft(1L, k1)) != 0 THEN
-                  transform(A1, (v1, j1) ->
-                    CASE WHEN j1 = 0 THEN v1 ^ (shiftleft(1L, k1) - 1) ELSE v1 END)
-                ELSE
-                  transform(A1, (v1, j1) -> CASE
-                    WHEN j1 = 0 OR (j1 = i1 - 1 AND i1 > 1)
-                      THEN v1 ^ ((element_at(A1, 1) ^ element_at(A1, i1))
-                                   & (shiftleft(1L, k1) - 1))
-                    ELSE v1 END)
-                END)),
-          (G1, p1) -> transform(G1, (vg, jg) ->
-            CASE WHEN jg = p1 - 1 THEN vg ^ element_at(G1, p1 - 1) ELSE vg END),
-          A2 -> aggregate(sequence(1, $n), cast(0 AS bigint), (acc, i2) ->
-                  acc | aggregate(sequence(0, ${bits - 1}), cast(0 AS bigint), (accb, k2) ->
-                    accb | shiftleft(((element_at(A2, i2) ^ $tOfA) >> k2) & 1,
-                                     k2 * $n + ($n - i2)))))"""
-  }
-
   /** OPTIMIZE HILBERT — [[optimizeZorder]]'s sibling on the Hilbert
     * curve: same logical-no-op commit, same stats/bloom interplay,
     * better range locality per clustered dimension. 2 columns use the
-    * rotation-state fold ([[hilbertExpr]]); 3-4 columns the Skilling
-    * transpose ([[hilbertNdExpr]]). */
+    * native rotation-state `hilbert_2d`; 3-4 columns the native
+    * Skilling transpose `hilbert_nd` ([[graft.functions.HilbertIndex]]). */
   def optimizeHilbert(s: SparkSession, dir: String, cols: Seq[String], nOut: Int): Long = {
     val prev = currentVersion(s, dir)
     require(prev >= 0, s"$dir not initialized")
     zorderRewrite(s, dir, cols, nOut, prev, liveFiles(s, dir, prev), curve = "hilbert")
   }
 
+  /** The shared z-order rewrite: cluster exactly `files` along the
+    * Morton (or Hilbert) curve and commit (remove `files`, add the
+    * replacements) through [[rewriteFiles]]. */
   private def zorderRewrite(
       s: SparkSession,
       dir: String,
@@ -3268,10 +2844,7 @@ object TableVersions {
   ): Long = {
     require(cols.size >= 2, "zorder needs at least two columns (else sort plainly)")
     require(cols.size <= 4, "the bigint interleave supports at most 4 columns")
-    val adds = liveFileAdds(s, dir, prev).filter(a => files.contains(a._1))
-    // DVs applied — the clustered rewrite must not resurrect
-    // merge-on-read-deleted rows
-    val df = applyDv(s, dir, prev, adds, readMerged(s, files))
+    val df = liveRows(s, dir, prev, liveFileAdds(s, dir, prev), files)
     // Numeric view per clustered column: numeric columns cast to
     // double; STRING columns project their first 6 UTF-8 bytes as a
     // big-endian integer (right-padded, so the projection is
@@ -3317,9 +2890,9 @@ object TableVersions {
       }
     }
     // Curve key via the NATIVE integer expressions (graft.functions.
-    // CurveIndex) — bit-identical to the HOF reference folds below
-    // ([[hilbertExpr]]/[[hilbertNdExpr]], kept as the spec's reference
-    // implementations): the nested aggregate/transform formulations
+    // CurveIndex) — bit-identical to the HOF reference folds the spec
+    // keeps (HilbertReference, src/test): the nested aggregate/transform
+    // formulations
     // were CodegenFallback with one closure dispatch + ArrayData
     // allocation per lambda step per ROW, and dominated the rewrite's
     // scan stage (HilbertCurveSpec pins the exact equality).
@@ -3327,27 +2900,17 @@ object TableVersions {
       if (curve == "hilbert" && n == 2) s"hilbert_2d($bitsPer, ${scaled(0)}, ${scaled(1)})"
       else if (curve == "hilbert") s"hilbert_nd($bitsPer, ${scaled.mkString(", ")})"
       else s"morton_nd($bitsPer, ${scaled.mkString(", ")})"
-    val v = prev + 1
-    claimVersion(s, dir, v)
-    val batch = s"$dir/data/b$v"
-    df.withColumn("__z", expr(zExpr))
-      .repartitionByRange(nOut, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write
-      .mode("errorifexists")
-      .parquet(batch)
-    appendLog(s, dir, v, if (curve == "hilbert") "hilbert" else "zorder", listParquet(s, batch), files)
-    compactSkipping(s, dir)
-    v
+    rewriteFiles(s, dir, if (curve == "hilbert") "hilbert" else "zorder", prev, files) { out =>
+      df.withColumn("__z", expr(zExpr))
+        .repartitionByRange(nOut, col("__z"))
+        .sortWithinPartitions("__z")
+        .drop("__z")
+        .write
+        .mode("errorifexists")
+        .parquet(out)
+    }
   }
 
-  /** CDC between two versions, keyed on `key`: one row per changed key
-    * with change_type ∈ insert | delete | update. Fingerprints are
-    * md5 over all non-key columns (name-sorted for stability), so the
-    * diff shuffles only (key, fp) pairs — the q125 reconciliation
-    * shape driven through the version store.
-    */
   /** Retention vacuum — the cost side of "old versions stay readable
     * forever": physically delete every data file unreachable from ANY
     * version ≥ `keepFrom`. Under last-action-wins liveness that is:
@@ -3832,6 +3395,12 @@ object TableVersions {
       .drop("fp_old", "fp_new")
   }
 
+  /** CDC between two versions, keyed on `key`: one row per changed key
+    * with change_type ∈ insert | delete | update. Fingerprints are
+    * md5 over all non-key columns (name-sorted for stability), so the
+    * diff shuffles only (key, fp) pairs — the q125 reconciliation
+    * shape driven through the version store.
+    */
   def changes(
       s: SparkSession,
       dir: String,

@@ -47,12 +47,11 @@ class ConflictCheckSpec extends AnyFunSuite with SparkSpec {
     // writer A resolves+stages its delete of the high file, then —
     // in the window before A claims — writer B deletes from the low
     // file and commits. A must validate B as disjoint and rebase.
-    val v = TableVersions.rewriteWhereChecked(
+    val v = TableVersions.rewriteCow(
       spark,
       dir,
-      "k >= 90",
-      identity,
-      "delete",
+      TableVersions.Where("k >= 90"),
+      None,
       beforeClaim = () => { TableVersions.commitDelete(spark, dir, "k < 10"): Unit }
     )
     assert(v == 3L) // B took v2; A rebased onto v3
@@ -68,12 +67,11 @@ class ConflictCheckSpec extends AnyFunSuite with SparkSpec {
     val dir = twoFileTable()
     val before = keysAtHead(dir)
     val e = intercept[TableVersions.ConcurrentCommitException] {
-      TableVersions.rewriteWhereChecked(
+      TableVersions.rewriteCow(
         spark,
         dir,
-        "k < 50",
-        identity,
-        "delete",
+        TableVersions.Where("k < 50"),
+        None,
         beforeClaim = () => { TableVersions.commitDelete(spark, dir, "k < 5"): Unit }
       )
     }
@@ -101,12 +99,11 @@ class ConflictCheckSpec extends AnyFunSuite with SparkSpec {
     // matching rival rows: the staged delete missed them -> fail safe
     val dir1 = twoFileTable()
     val e = intercept[TableVersions.ConcurrentCommitException] {
-      TableVersions.rewriteWhereChecked(
+      TableVersions.rewriteCow(
         spark,
         dir1,
-        "k between 90 and 99",
-        identity,
-        "delete",
+        TableVersions.Where("k between 90 and 99"),
+        None,
         beforeClaim =
           () => { TableVersions.commitAppend(Seq((95L, "late")).toDF("k", "payload"), dir1): Unit }
       )
@@ -114,12 +111,11 @@ class ConflictCheckSpec extends AnyFunSuite with SparkSpec {
     assert(e.getMessage.contains("matching"), e.getMessage)
     // non-matching rival rows commute -> rebase
     val dir2 = twoFileTable()
-    val v = TableVersions.rewriteWhereChecked(
+    val v = TableVersions.rewriteCow(
       spark,
       dir2,
-      "k between 90 and 99",
-      identity,
-      "delete",
+      TableVersions.Where("k between 90 and 99"),
+      None,
       beforeClaim =
         () => { TableVersions.commitAppend(Seq((200L, "late")).toDF("k", "payload"), dir2): Unit }
     )
@@ -130,23 +126,21 @@ class ConflictCheckSpec extends AnyFunSuite with SparkSpec {
   test("a rival deletion vector targeting a hit file conflicts; on the other file it rebases") {
     val dir = twoFileTable()
     val e = intercept[TableVersions.ConcurrentCommitException] {
-      TableVersions.rewriteWhereChecked(
+      TableVersions.rewriteCow(
         spark,
         dir,
-        "k < 50",
-        identity,
-        "delete",
+        TableVersions.Where("k < 50"),
+        None,
         beforeClaim = () => { TableVersions.commitDeleteMor(spark, dir, "k = 7"): Unit }
       )
     }
     assert(e.getMessage.contains("deletion vector"), e.getMessage)
     val dir2 = twoFileTable()
-    val v = TableVersions.rewriteWhereChecked(
+    val v = TableVersions.rewriteCow(
       spark,
       dir2,
-      "k < 50",
-      identity,
-      "delete",
+      TableVersions.Where("k < 50"),
+      None,
       beforeClaim = () => { TableVersions.commitDeleteMor(spark, dir2, "k = 77"): Unit }
     )
     assert(v == 3L)
@@ -157,12 +151,11 @@ class ConflictCheckSpec extends AnyFunSuite with SparkSpec {
     val dir = twoFileTable()
     val before = keysAtHead(dir)
     val e = intercept[TableVersions.ConcurrentCommitException] {
-      TableVersions.rewriteWhereChecked(
+      TableVersions.rewriteCow(
         spark,
         dir,
-        "k >= 90",
-        identity,
-        "delete",
+        TableVersions.Where("k >= 90"),
+        None,
         rivalLogPollMs = 300L,
         // a rival claims the next version and crashes before its log
         beforeClaim = () => TableVersions.claimVersion(spark, dir, 2L)
@@ -172,7 +165,7 @@ class ConflictCheckSpec extends AnyFunSuite with SparkSpec {
     assert(keysAtHead(dir) == before)
     // recovery path: release the stranded claim, re-run, lands clean
     TableVersions.releaseStaleClaim(spark, dir, 2L)
-    assert(TableVersions.commitDeleteChecked(spark, dir, "k >= 90") == 2L)
+    assert(TableVersions.commitDelete(spark, dir, "k >= 90") == 2L)
     assert(keysAtHead(dir) == (0L until 90L).toSet)
   }
 
@@ -182,7 +175,7 @@ class ConflictCheckSpec extends AnyFunSuite with SparkSpec {
     val dir = twoFileTable()
     // rebase: the rival deletes low keys; the merge upserts high keys
     val src = Seq((95L, "updated95"), (200L, "fresh200")).toDF("k", "payload")
-    val v = TableVersions.commitMergeChecked(
+    val v = TableVersions.mergeUpsert(
       src,
       dir,
       "k",
@@ -200,7 +193,7 @@ class ConflictCheckSpec extends AnyFunSuite with SparkSpec {
     )
     // fail safe: a rival append lands a row with a key the merge replaces
     val e = intercept[TableVersions.ConcurrentCommitException] {
-      TableVersions.commitMergeChecked(
+      TableVersions.mergeUpsert(
         Seq((300L, "x"), (42L, "y")).toDF("k", "payload"),
         dir,
         "k",
@@ -215,9 +208,11 @@ class ConflictCheckSpec extends AnyFunSuite with SparkSpec {
     val s = spark
     import s.implicits._
     val dir = twoFileTable()
-    val v = TableVersions.optimizeChecked(
+    val v = TableVersions.packSmallFiles(
       s,
       dir,
+      smallBytes = 128L * 1024 * 1024,
+      targetBytes = 128L * 1024 * 1024,
       beforeClaim =
         () => { TableVersions.commitAppend(Seq((500L, "late")).toDF("k", "payload"), dir): Unit }
     )
@@ -227,9 +222,11 @@ class ConflictCheckSpec extends AnyFunSuite with SparkSpec {
     assert(TableVersions.changesFeed(s, dir, 2L, 3L).isEmpty)
     val dir2 = twoFileTable()
     val e = intercept[TableVersions.ConcurrentCommitException] {
-      TableVersions.optimizeChecked(
+      TableVersions.packSmallFiles(
         s,
         dir2,
+        smallBytes = 128L * 1024 * 1024,
+        targetBytes = 128L * 1024 * 1024,
         beforeClaim = () => { TableVersions.commitDelete(s, dir2, "k = 7"): Unit }
       )
     }
@@ -242,12 +239,11 @@ class ConflictCheckSpec extends AnyFunSuite with SparkSpec {
     import s.implicits._
     val dir = twoFileTable()
     TableVersions.addConstraint(spark, dir, "k_nonneg", "k >= 0")
-    val v = TableVersions.rewriteWhereChecked(
+    val v = TableVersions.rewriteCow(
       spark,
       dir,
-      "k >= 95",
-      df => df.withColumn("payload", concat(col("payload"), lit("!"))),
-      "update",
+      TableVersions.Where("k >= 95"),
+      Some(df => df.withColumn("payload", concat(col("payload"), lit("!")))),
       beforeClaim = () => { TableVersions.commitDelete(spark, dir, "k < 3"): Unit }
     )
     assert(v == 3L)
@@ -256,7 +252,7 @@ class ConflictCheckSpec extends AnyFunSuite with SparkSpec {
     assert(head.count() == 97L)
     // a violating update refuses at compute time, before any claim
     intercept[IllegalArgumentException] {
-      TableVersions.commitUpdateChecked(
+      TableVersions.commitUpdate(
         spark,
         dir,
         "k = 50",
@@ -271,10 +267,10 @@ class ConflictCheckSpec extends AnyFunSuite with SparkSpec {
     // low file and commits in A's claim window. Disjoint target files
     // commute — both masks apply at the head.
     val dir = twoFileTable()
-    val v = TableVersions.commitDeleteMorChecked(
+    val v = TableVersions.deleteMor(
       spark,
       dir,
-      "k >= 90",
+      TableVersions.Where("k >= 90"),
       beforeClaim = () => { TableVersions.commitDeleteMor(spark, dir, "k < 10"): Unit }
     )
     assert(v == 3L) // B took v2; A's DV rebased onto v3
@@ -287,10 +283,10 @@ class ConflictCheckSpec extends AnyFunSuite with SparkSpec {
     val dir2 = twoFileTable()
     val before = keysAtHead(dir2)
     val e = intercept[TableVersions.ConcurrentCommitException] {
-      TableVersions.commitDeleteMorChecked(
+      TableVersions.deleteMor(
         spark,
         dir2,
-        "k < 50",
+        TableVersions.Where("k < 50"),
         beforeClaim = () => { TableVersions.commitDeleteMor(spark, dir2, "k = 7"): Unit }
       )
     }
@@ -305,10 +301,10 @@ class ConflictCheckSpec extends AnyFunSuite with SparkSpec {
     // a dead file and would silently miss the rewritten rows
     val dir = twoFileTable()
     val e = intercept[TableVersions.ConcurrentCommitException] {
-      TableVersions.commitDeleteMorChecked(
+      TableVersions.deleteMor(
         spark,
         dir,
-        "k < 50",
+        TableVersions.Where("k < 50"),
         beforeClaim = () => { TableVersions.commitDelete(spark, dir, "k < 5"): Unit }
       )
     }
@@ -326,20 +322,20 @@ class ConflictCheckSpec extends AnyFunSuite with SparkSpec {
     // non-matching rows the DV rebases
     val dir2 = twoFileTable()
     val e2 = intercept[TableVersions.ConcurrentCommitException] {
-      TableVersions.commitDeleteMorChecked(
+      TableVersions.deleteMor(
         spark,
         dir2,
-        "k between 90 and 99",
+        TableVersions.Where("k between 90 and 99"),
         beforeClaim =
           () => { TableVersions.commitAppend(Seq((95L, "late")).toDF("k", "payload"), dir2): Unit }
       )
     }
     assert(e2.getMessage.contains("matching"), e2.getMessage)
     val dir3 = twoFileTable()
-    val v = TableVersions.commitDeleteMorChecked(
+    val v = TableVersions.deleteMor(
       spark,
       dir3,
-      "k between 90 and 99",
+      TableVersions.Where("k between 90 and 99"),
       beforeClaim =
         () => { TableVersions.commitAppend(Seq((200L, "late")).toDF("k", "payload"), dir3): Unit }
     )
@@ -351,5 +347,110 @@ class ConflictCheckSpec extends AnyFunSuite with SparkSpec {
     // compaction folds the rebased DV away with identical answers
     TableVersions.compactMor(spark, dir3)
     assert(keysAtHead(dir3) == (0L until 90L).toSet + 200L)
+  }
+
+  private def stagingLeft(dir: String): Seq[String] = {
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq(s"$dir/data", s"$dir/_cdf", s"$dir/_dvstage")
+      .map(new org.apache.hadoop.fs.Path(_))
+      .filter(fs.exists)
+      .flatMap(fs.listStatus(_).map(_.getPath.getName))
+      .filter(_.startsWith("stage-"))
+  }
+
+  test("a rewrite whose compute fails at run time leaves the table at its head and writable") {
+    val failing: Seq[(String, String => Unit)] = Seq(
+      "CoW delete with a throwing predicate" -> { dir =>
+        TableVersions.commitDelete(spark, dir, "if(k = 7, raise_error('boom'), k < 3)"): Unit
+      },
+      "CoW update with a throwing transform" -> { dir =>
+        TableVersions.commitUpdate(
+          spark,
+          dir,
+          "k >= 90",
+          _.withColumn("payload", expr("if(k = 95, raise_error('boom'), payload)"))
+        ): Unit
+      },
+      "MOR delete with a throwing predicate" -> { dir =>
+        TableVersions.commitDeleteMor(spark, dir, "if(k = 7, raise_error('boom'), k < 3)"): Unit
+      }
+    )
+    failing.foreach { case (what, commit) =>
+      val dir = twoFileTable()
+      val p = TableVersions.currentVersion(spark, dir)
+      val before = TableVersions.readVersion(spark, dir, p).orderBy("k").collect().toSeq
+      val e = intercept[Exception](commit(dir))
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(causes.exists(c => String.valueOf(c.getMessage).contains("boom")), s"$what: $e")
+      assert(TableVersions.currentVersion(spark, dir) == p, what)
+      assert(TableVersions.readVersion(spark, dir, p).orderBy("k").collect().toSeq == before, what)
+      // the failed commit discarded its own staging: nothing for the janitor
+      assert(stagingLeft(dir).isEmpty, s"$what: ${stagingLeft(dir)}")
+      assert(TableVersions.sweepStagedOrphans(spark, dir, 0L) == 0, what)
+      // and the next writer lands at p + 1 with no releaseStaleClaim
+      assert(TableVersions.commitDelete(spark, dir, "k = 0") == p + 1, what)
+      assert(keysAtHead(dir) == (1L until 100L).toSet, what)
+    }
+  }
+
+  test("key-set deletes (CoW and MOR) rebase past a rival on the other file") {
+    val s = spark
+    import s.implicits._
+    val cow = twoFileTable()
+    val v = TableVersions.withKeySet(Seq(95L, 96L, 96L).toDF("k"), "k") { m =>
+      TableVersions.rewriteCow(
+        spark,
+        cow,
+        m,
+        None,
+        beforeClaim = () => { TableVersions.commitDelete(spark, cow, "k < 5"): Unit }
+      )
+    }
+    assert(v == 3L)
+    assert(keysAtHead(cow) == (5L until 100L).toSet -- Set(95L, 96L))
+    assert(TableVersions.changesFeed(spark, cow, 2L, 3L).count() == 2L)
+    val mor = twoFileTable()
+    val vm = TableVersions.withKeySet(Seq(95L, 96L).toDF("k"), "k") { m =>
+      TableVersions.deleteMor(
+        spark,
+        mor,
+        m,
+        beforeClaim = () => { TableVersions.commitDeleteMor(spark, mor, "k < 5"): Unit }
+      )
+    }
+    assert(vm == 3L)
+    assert(keysAtHead(mor) == (5L until 100L).toSet -- Set(95L, 96L))
+    // the rebased DV anchors at its committed version: time travel to
+    // the rival's version still sees both keys
+    assert(TableVersions.readVersion(spark, mor, 2L).filter(col("k") >= 95L).count() == 5L)
+  }
+
+  test("key-set deletes (CoW and MOR) fail safe when a rival adds a deleted key") {
+    val s = spark
+    import s.implicits._
+    Seq("cow", "mor").foreach { kind =>
+      val dir = twoFileTable()
+      val rival = () => {
+        TableVersions.commitAppend(Seq((95L, "late")).toDF("k", "payload"), dir): Unit
+      }
+      val e = intercept[TableVersions.ConcurrentCommitException] {
+        TableVersions.withKeySet(Seq(95L, 96L).toDF("k"), "k") { m =>
+          if (kind == "cow") TableVersions.rewriteCow(spark, dir, m, None, beforeClaim = rival)
+          else TableVersions.deleteMor(spark, dir, m, beforeClaim = rival)
+        }
+      }
+      assert(e.getMessage.contains("keys this"), s"$kind: ${e.getMessage}")
+      // the rival holds, ours left no trace: both keys still live, the
+      // rival's row included, and no staging or DV of ours remains
+      assert(TableVersions.currentVersion(spark, dir) == 2L, kind)
+      val head = TableVersions.readVersion(spark, dir, 2L)
+      assert(head.count() == 101L, kind)
+      assert(head.filter(col("k") === 95L).count() == 2L, kind)
+      assert(stagingLeft(dir).isEmpty, s"$kind: ${stagingLeft(dir)}")
+      // the claim was released: the next writer takes v3
+      assert(TableVersions.commitDeleteKeys(Seq(95L).toDF("k"), dir, "k") == 3L, kind)
+      assert(!keysAtHead(dir).contains(95L), kind)
+    }
   }
 }

@@ -20,7 +20,7 @@ class HilbertCurveSpec extends AnyFunSuite with SparkSpec {
     val grid = (for { x <- 0 until 16; y <- 0 until 16 } yield (x.toLong, y.toLong))
       .toDF("x", "y")
     val d = grid
-      .withColumn("d", expr(TableVersions.hilbertExpr("x", "y", 4)))
+      .withColumn("d", expr(HilbertReference.hilbertExpr("x", "y", 4)))
       .collect()
       .map(r => (r.getLong(2), (r.getLong(0), r.getLong(1))))
       .sortBy(_._1)
@@ -52,7 +52,7 @@ class HilbertCurveSpec extends AnyFunSuite with SparkSpec {
     val grid = (for { x <- 0 until 8; y <- 0 until 8; z <- 0 until 8 }
       yield (x.toLong, y.toLong, z.toLong)).toDF("x", "y", "z")
     val d = grid
-      .withColumn("d", expr(TableVersions.hilbertNdExpr(Seq("x", "y", "z"), 3)))
+      .withColumn("d", expr(HilbertReference.hilbertNdExpr(Seq("x", "y", "z"), 3)))
       .collect()
       .map(r => (r.getLong(3), (r.getLong(0), r.getLong(1), r.getLong(2))))
       .sortBy(_._1)
@@ -69,7 +69,7 @@ class HilbertCurveSpec extends AnyFunSuite with SparkSpec {
     val grid = (for { a <- 0 until 4; b <- 0 until 4; c <- 0 until 4; e <- 0 until 4 }
       yield (a.toLong, b.toLong, c.toLong, e.toLong)).toDF("a", "b", "c", "e")
     val d = grid
-      .withColumn("d", expr(TableVersions.hilbertNdExpr(Seq("a", "b", "c", "e"), 2)))
+      .withColumn("d", expr(HilbertReference.hilbertNdExpr(Seq("a", "b", "c", "e"), 2)))
       .collect()
       .map(r => (r.getLong(4), (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))))
       .sortBy(_._1)
@@ -86,7 +86,7 @@ class HilbertCurveSpec extends AnyFunSuite with SparkSpec {
     val grid = (for { x <- 0 until 16; y <- 0 until 16 } yield (x.toLong, y.toLong))
       .toDF("x", "y")
     val d = grid
-      .withColumn("d", expr(TableVersions.hilbertNdExpr(Seq("x", "y"), 4)))
+      .withColumn("d", expr(HilbertReference.hilbertNdExpr(Seq("x", "y"), 4)))
       .collect()
       .map(r => (r.getLong(2), (r.getLong(0), r.getLong(1))))
       .sortBy(_._1)
@@ -109,7 +109,7 @@ class HilbertCurveSpec extends AnyFunSuite with SparkSpec {
       .toDF("x", "y")
     assert(
       grid2
-        .withColumn("ref", expr(TableVersions.hilbertExpr("x", "y", 16)))
+        .withColumn("ref", expr(HilbertReference.hilbertExpr("x", "y", 16)))
         .withColumn("nat", expr("hilbert_2d(16, x, y)"))
         .filter(col("ref") =!= col("nat"))
         .isEmpty,
@@ -135,7 +135,7 @@ class HilbertCurveSpec extends AnyFunSuite with SparkSpec {
       .toDF("x", "y", "z")
     assert(
       grid3
-        .withColumn("ref", expr(TableVersions.hilbertNdExpr(Seq("x", "y", "z"), 16)))
+        .withColumn("ref", expr(HilbertReference.hilbertNdExpr(Seq("x", "y", "z"), 16)))
         .withColumn("nat", expr("hilbert_nd(16, x, y, z)"))
         .filter(col("ref") =!= col("nat"))
         .isEmpty,
@@ -145,7 +145,7 @@ class HilbertCurveSpec extends AnyFunSuite with SparkSpec {
       yield (a.toLong, b.toLong, c.toLong, e.toLong)).toDF("a", "b", "c", "e")
     assert(
       grid4
-        .withColumn("ref", expr(TableVersions.hilbertNdExpr(Seq("a", "b", "c", "e"), 15)))
+        .withColumn("ref", expr(HilbertReference.hilbertNdExpr(Seq("a", "b", "c", "e"), 15)))
         .withColumn("nat", expr("hilbert_nd(15, a, b, c, e)"))
         .filter(col("ref") =!= col("nat"))
         .isEmpty,
