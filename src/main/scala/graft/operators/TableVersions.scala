@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multi-version table store with time travel and CDC — the lakehouse
@@ -25,7 +25,13 @@ import org.apache.spark.sql.functions._
   *    files, it logs `remove` for the files it rewrites (copy-on-write
   *    of only the AFFECTED files) and `add` for their replacements.
   *    Old versions stay readable forever — time travel is just
-  *    filtering the log to `version <= v`.
+  *    filtering the log to `version <= v`;
+  *  - every operation resolves its version ONCE into a [[Snapshot]]
+  *    (the version, the checkpoint it came from, the live files with
+  *    each one's add version and logged row count), and every read —
+  *    full, partition, bucket, transform, stats or bloom — is one
+  *    [[scan]] of it: a file cut judged on paths and index metadata,
+  *    the deletion vectors, then the row predicate re-applied.
   *
   * Writes go through the Hadoop FileSystem API (HDFS/object-store
   * ready, same discipline as IvfIndex.compact). CONCURRENT WRITERS
@@ -202,13 +208,12 @@ object TableVersions {
   /** Write a checkpoint's (file, n_rows) snapshot as a single parquet
     * file ON THE DRIVER — [[writeLogFile]]'s discipline for the other
     * O(files) metadata table this store writes from a driver-side Seq
-    * (the snapshot rows come straight out of [[liveFileMeta]]); the
+    * (the rows come straight out of a [[Snapshot]]); the
     * previous `toDF.coalesce(1).write` paid a Spark job per
     * checkpoint. Bit-compatible with the DataFrame writer (optional
-    * BINARY(UTF8)/INT64, snappy, `part-*.parquet` naming), so both
-    * readers — the driver Group reads and the one Spark `.select("file")`
-    * read — are unchanged. Same hidden-temp + checked-rename crash
-    * safety as the log writer. */
+    * BINARY(UTF8)/INT64, snappy, `part-*.parquet` naming), so the
+    * driver Group read ([[snapshot]]) is unchanged. Same hidden-temp +
+    * checked-rename crash safety as the log writer. */
   private def writeSnapshotFile(
       s: SparkSession,
       dirPath: String,
@@ -364,29 +369,26 @@ object TableVersions {
     * the checkpointed version. Idempotent per version.
     */
   def checkpoint(s: SparkSession, dir: String): Long = {
-    import s.implicits._
-    val v = currentVersion(s, dir)
-    require(v >= 0, s"$dir not initialized")
+    val snap = headSnapshot(s, dir)
+    val v = snap.version
     val target = s"${ckptDir(dir)}/c$v"
-    if (checkpoints(s, dir).contains(v)) return v
-    val meta = liveFileMeta(s, dir, v)
-    val adds = meta.map(t => (t._1, t._2))
-    val files = adds.map(_._1)
-    // resolve the applicable deletion vectors BEFORE the snapshot
-    // exists — resolving after would route through the new checkpoint
-    // itself (true add anchors replaced by c) and fold nothing
-    val dvFold = dvApplicable(s, dir, v, adds)
+    if (snap.checkpoint.contains(v)) return v
+    // resolve the applicable deletion vectors against the snapshot
+    // resolved BEFORE the checkpoint exists — resolving after would
+    // route through the new checkpoint itself (true add anchors
+    // replaced by c) and fold nothing
+    val dvFold = dvApplicable(s, snap)
     // the snapshot carries the log's row counts forward — a
     // post-checkpoint [[countAt]] stays footer-free. Driver-side
-    // write: the rows ARE a driver Seq (liveFileMeta's output), and a
-    // Spark job per checkpoint was pure scheduling overhead.
-    writeSnapshotFile(s, target, meta.map { case (f, _, n) => (f, n) })
+    // write: the rows ARE a driver Seq, and a Spark job per checkpoint
+    // was pure scheduling overhead.
+    writeSnapshotFile(s, target, snap.files.map(f => (f.path, f.nRows)))
     // persist the UNION schema beside the file list (one footer pass,
     // paid here once): evolved-table reads then resolve their schema
     // from this file plus the tail-added files' footers — O(1 + tail)
     // instead of a footer read per live file per read. `_`-prefixed, so
     // the checkpoint's own parquet read never sees it.
-    val schema = s.read.option("mergeSchema", "true").parquet(files: _*).schema
+    val schema = readMerged(s, snap.paths).schema
     val fs = fsOf(s, dir)
     val out = fs.create(new Path(s"$target/_schema.json"), true)
     out.write(schema.json.getBytes("UTF-8"))
@@ -445,87 +447,95 @@ object TableVersions {
       )
   }
 
-  /** Files live AT version v: the file's LAST log action at or before
-    * v is an `add`. Last-action-wins (not add/remove counting) because
-    * [[restore]] legitimately RE-ADDS files a later commit had
-    * removed — a file's lifecycle is any alternation of add/remove,
-    * and liveness at v is decided by whichever came last. Resolution
-    * starts from the nearest checkpoint ≤ v when one exists (the
-    * snapshot participates as an `add` at the checkpoint version) and
-    * the tail read prunes to the (ckpt, v] log directories; without a
-    * checkpoint it aggregates the (pruned) log up to v. A version
+  /** One file live in a [[Snapshot]]: its path in the log's form, the
+    * version of the add that made it live, and the row count that add
+    * logged (None for files logged or checkpointed before counts
+    * existed — the caller's footer fallback). The add version is the
+    * deletion vectors' applicability anchor ([[dvApplicable]]): a DV
+    * applies to the file INCARNATION that was live when it was
+    * written, i.e. dv_version > addVersion. Checkpoint-resolved files
+    * report the CHECKPOINT version as their add (their true add is
+    * older); the DVs that predate the checkpoint are folded into the
+    * checkpoint's own `_dvsnap`, so the approximation never loses a
+    * delete. */
+  private final case class LiveFile(path: String, addVersion: Long, nRows: Option[Long])
+
+  /** One table version, resolved ONCE per operation ([[snapshot]]):
+    * the version, the checkpoint its resolution started from (None
+    * when it aggregated the log from version 0) and its live files,
+    * sorted by path. Every read ([[scan]]) and every rewrite takes one;
+    * nothing downstream lists checkpoints or re-reads the log. */
+  private final case class Snapshot(
+      dir: String,
+      version: Long,
+      checkpoint: Option[Long],
+      files: Seq[LiveFile]
+  ) {
+    def paths: Seq[String] = files.map(_.path)
+
+    /** This snapshot cut to the files `keep` accepts. */
+    def where(keep: String => Boolean): Snapshot = copy(files = files.filter(f => keep(f.path)))
+  }
+
+  /** Resolve version v. A file is live AT v when its LAST log action at
+    * or before v is an `add`. Last-action-wins (not add/remove
+    * counting) because [[restore]] legitimately RE-ADDS files a later
+    * commit had removed — a file's lifecycle is any alternation of
+    * add/remove, and liveness at v is decided by whichever came last.
+    * Resolution starts from the nearest checkpoint ≤ v when one exists
+    * (the snapshot participates as an `add` at the checkpoint version)
+    * and the tail read prunes to the (ckpt, v] log directories; without
+    * a checkpoint it aggregates the (pruned) log up to v. A version
     * never both adds and removes the same file (commits rewrite into
     * fresh batch directories), so the within-version tie never occurs;
-    * the struct ordering would resolve it to `remove` — the safe side.
-    */
-  private[operators] def liveFiles(s: SparkSession, dir: String, v: Long): Seq[String] =
-    liveFileAdds(s, dir, v).map(_._1)
-
-  /** Live files at v WITH each file's last-add version — the deletion
-    * vectors' applicability anchor ([[dvApplicable]]): a DV applies to
-    * the file INCARNATION that was live when it was written, i.e.
-    * dv_version > lastAdd. Checkpoint-resolved files report the
-    * CHECKPOINT version as their add (their true add is older); the
-    * DVs that predate the checkpoint are folded into the checkpoint's
-    * own `_dvsnap`, so the approximation never loses a delete.
-    */
-  private def liveFileAdds(s: SparkSession, dir: String, v: Long): Seq[(String, Long)] =
-    liveFileMeta(s, dir, v).map(t => (t._1, t._2))
-
-  /** [[liveFileAdds]] plus each file's LOG-CARRIED row count (None for
-    * files logged/checkpointed before counts existed — the caller's
-    * footer fallback). The count rides the same last-action-wins
-    * resolution as the add version: a restore that re-adds a file
-    * re-logs the count it resolved, so the winning action always
-    * carries it. */
-  private def liveFileMeta(
-      s: SparkSession,
-      dir: String,
-      v: Long
-  ): Seq[(String, Long, Option[Long])] = {
-    // last-action-wins, resolved ON THE DRIVER: the log and checkpoint
-    // files are O(KB) metadata this store wrote itself, and routing
-    // every liveness resolution through a Spark job (read + shuffle-less
-    // aggregate + collect) paid 100-200 ms of scheduling per call —
-    // version-store operators resolve liveness dozens of times per
-    // lifecycle run. Semantics identical to the previous DataFrame
-    // fold: max by (version, action) per file — "remove" > "add"
-    // lexicographically, matching the struct ordering — then keep adds.
-    // (n_rows trailed the struct only to break ties commits never
-    // produce: a version never both adds and removes one file.)
-    def lastActionAdds(
-        rows: Seq[(String, Long, String, Option[Long])]
-    ): Seq[(String, Long, Option[Long])] =
+    * the ordering would resolve it to `remove` — the safe side. The row
+    * count rides the same resolution as the add version: a restore that
+    * re-adds a file re-logs the count it resolved, so the winning
+    * action always carries it.
+    *
+    * Resolved ON THE DRIVER: the log and checkpoint files are O(KB)
+    * metadata this store wrote itself, and routing every liveness
+    * resolution through a Spark job (read + aggregate + collect) paid
+    * 100-200 ms of scheduling per call. */
+  private def snapshot(s: SparkSession, dir: String, v: Long): Snapshot = {
+    // max by (version, action) per file — "remove" > "add"
+    // lexicographically — then keep adds
+    def lastActionAdds(rows: Seq[(String, Long, String, Option[Long])]): Seq[LiveFile] =
       rows
         .groupBy(_._1)
         .map { case (_, acts) => acts.maxBy(a => (a._2, a._3)) }
-        .collect { case (f, ver, "add", n) => (f, ver, n) }
+        .collect { case (f, ver, "add", n) => LiveFile(f, ver, n) }
         .toSeq
+    def logTail(from: Long) =
+      readLogRowsLocal(s, dir, from, v)
+        .filter(r => r._3 == "add" || r._3 == "remove")
+        .map(r => (r._2, r._5, r._3, r._4))
     val base = checkpoints(s, dir).filter(_ <= v).lastOption
     val resolved = base match {
       case Some(c) =>
         val snap = readParquetRowsLocal(s, s"${ckptDir(dir)}/c$c").map { g =>
           (groupString(g, "file"), c, "add", groupLong(g, "n_rows"))
         }
-        if (c == v) snap.map { case (f, ver, _, n) => (f, ver, n) }
-        else {
-          val tail = readLogRowsLocal(s, dir, c + 1, v)
-            .filter(r => r._3 == "add" || r._3 == "remove")
-            .map(r => (r._2, r._5, r._3, r._4))
-          lastActionAdds(snap ++ tail)
-        }
-      case None =>
-        lastActionAdds(
-          readLogRowsLocal(s, dir, 0L, v)
-            .filter(r => r._3 == "add" || r._3 == "remove")
-            .map(r => (r._2, r._5, r._3, r._4))
-        )
+        if (c == v) snap.map { case (f, ver, _, n) => LiveFile(f, ver, n) }
+        else lastActionAdds(snap ++ logTail(c + 1))
+      case None => lastActionAdds(logTail(0L))
     }
-    resolved.sortBy(_._1)
+    Snapshot(dir, v, base, resolved.sortBy(_.path))
   }
 
+  /** The head snapshot a rewrite computes against. */
+  private def headSnapshot(s: SparkSession, dir: String): Snapshot = {
+    val v = currentVersion(s, dir)
+    require(v >= 0, s"$dir not initialized")
+    snapshot(s, dir, v)
+  }
+
+  /** The paths live at v. */
+  private[operators] def liveFiles(s: SparkSession, dir: String, v: Long): Seq[String] =
+    snapshot(s, dir, v).paths
+
   /** Commit-log rows (op, file, action, n_rows, version) for versions
-    * in [loV, hiV], read driver-side (see [[liveFileMeta]]). */
+    * in [loV, hiV], read driver-side (see [[snapshot]]). */
   private def readLogRowsLocal(
       s: SparkSession,
       dir: String,
@@ -578,10 +588,40 @@ object TableVersions {
       }
   }
 
-  /** The table as of version v (time travel). Below the vacuum
-    * horizon the data is physically gone — fail with the boundary,
-    * not a missing-file stack trace. `mergeSchema = true` resolves the
-    * UNION schema (SCHEMA EVOLUTION: files written before an added
+  /** The snapshot a read serves: refused below the vacuum horizon
+    * (the data is physically gone — fail with the boundary, not a
+    * missing-file stack trace) and when no file is live at v. */
+  private def readable(s: SparkSession, dir: String, v: Long): Snapshot = {
+    val horizon = retentionHorizon(s, dir)
+    require(v >= horizon, s"version $v of $dir was vacuumed (retention horizon is $horizon)")
+    val snap = snapshot(s, dir, v)
+    require(snap.files.nonEmpty, s"version $v of $dir has no live files")
+    snap
+  }
+
+  /** The ONE scan behind every read variant: the files of `snap` that
+    * `keep` accepts — a layout or index cut, judged on the path alone
+    * and never dropping a file that holds a matching row — read through
+    * `reader`, deletion vectors applied, then `pred` re-applied, so a
+    * pruned read equals the full read filtered by `pred` exactly. An
+    * empty cut reads one live file filtered to nothing: zero rows, the
+    * same schema. */
+  private def scan(
+      reader: DataFrameReader,
+      snap: Snapshot,
+      keep: String => Boolean = _ => true,
+      pred: Option[DataFrame => Column] = None
+  ): DataFrame = {
+    val cut = snap.where(keep)
+    val df =
+      if (cut.files.isEmpty) reader.parquet(snap.files.head.path).filter(lit(false))
+      else applyDv(cut, reader.parquet(cut.paths: _*))
+    pred.fold(df)(p => df.filter(p(df)))
+  }
+
+  /** The table as of version v (time travel), refused below the
+    * vacuum horizon. `mergeSchema = true` resolves the UNION schema
+    * (SCHEMA EVOLUTION: files written before an added
     * column read it back as NULL) from the nearest checkpoint's
     * persisted schema plus the footers of files added SINCE it —
     * O(1 + tail) metadata, never a footer read per live file; without
@@ -599,40 +639,19 @@ object TableVersions {
       v: Long,
       mergeSchema: Boolean = false
   ): DataFrame = {
-    val horizon = retentionHorizon(s, dir)
-    require(
-      v >= horizon,
-      s"version $v of $dir was vacuumed (retention horizon is $horizon)"
-    )
-    val adds = liveFileAdds(s, dir, v)
-    val files = adds.map(_._1)
-    require(files.nonEmpty, s"version $v of $dir has no live files")
-    if (!mergeSchema) return applyDv(s, dir, v, adds, s.read.parquet(files: _*))
-    val resolved = for {
-      c <- checkpoints(s, dir).filter(_ <= v).lastOption
+    val snap = readable(s, dir, v)
+    if (!mergeSchema) return scan(s.read, snap)
+    // the snapshot already holds the checkpoint's file list: the files
+    // added above it are the tail whose footers extend its schema
+    val merged = for {
+      c <- snap.checkpoint
       ckptSchema <- checkpointSchema(s, dir, c)
-      ckptFiles = s.read
-        .parquet(s"${ckptDir(dir)}/c$c")
-        .select("file")
-        .collect()
-        .map(_.getString(0))
-        .toSet
-      tail = files.filterNot(ckptFiles)
+      tail = snap.files.filter(_.addVersion > c).map(_.path)
       merged <-
         if (tail.isEmpty) Some(ckptSchema)
-        else
-          mergeAddColumns(
-            ckptSchema,
-            s.read.option("mergeSchema", "true").parquet(tail: _*).schema
-          )
-    } yield s.read.schema(merged).parquet(files: _*)
-    applyDv(
-      s,
-      dir,
-      v,
-      adds,
-      resolved.getOrElse(s.read.option("mergeSchema", "true").parquet(files: _*))
-    )
+        else mergeAddColumns(ckptSchema, readMerged(s, tail).schema)
+    } yield merged
+    scan(merged.fold(s.read.option("mergeSchema", "true"))(s.read.schema(_)), snap)
   }
 
   /** Commit a new batch of rows (version 0 initializes the table). */
@@ -849,31 +868,19 @@ object TableVersions {
       beforeClaim: () => Unit = () => ()
   ): Long = {
     val op = if (update.isEmpty) "delete" else "update"
-    val prev = currentVersion(s, dir)
-    require(prev >= 0, s"$dir not initialized")
-    val adds = liveFileAdds(s, dir, prev)
-    // mergeSchema: a rewrite on an EVOLVED table must see the union
-    // schema (a plain read would adopt one arbitrary file's schema and
-    // silently drop the added column from the rewritten rows); the
-    // rewritten batch then carries the merged schema — copy-on-write
-    // doubles as gradual physical schema migration. DVs applied: a
-    // merge-on-read-deleted row must neither match nor re-land in the
-    // rewritten batch (it would resurrect).
-    val hit = hitFiles(
-      s,
-      m.rows(applyDv(s, dir, prev, adds, readMerged(s, adds.map(_._1)), keepMeta = true))
-    )
+    val snap = headSnapshot(s, dir)
+    // the live rows carry the union schema ([[liveRows]]), so the
+    // rewritten batch does too — copy-on-write doubles as gradual
+    // physical schema migration
+    val hit = hitFiles(s, m.rows(liveRows(s, snap, snap.paths, keepMeta = true)))
     // the hit files feed the keep side, the matched pre-images, and
     // (for updates) the transform — cached so the parquet read + DV
     // anti-join runs once per commit instead of once per consumer
     // (guide §2.4/§5); recompute on eviction re-reads the same
     // immutable file paths
-    val hitDf =
-      if (hit.isEmpty) None
-      else
-        Some(applyDv(s, dir, prev, adds.filter(a => hit(a._1)), readMerged(s, hit.toSeq.sorted)).cache())
+    val hitDf = if (hit.isEmpty) None else Some(liveRows(s, snap, hit.toSeq.sorted).cache())
     try {
-      claimValidated(s, dir, op, prev, hit.toSeq.sorted, Some(m), Set.empty, rivalLogPollMs, beforeClaim) {
+      claimValidated(s, dir, op, snap.version, hit.toSeq.sorted, Some(m), Set.empty, rivalLogPollMs, beforeClaim) {
         st =>
           hitDf.foreach { df =>
             val matched = m.rows(df)
@@ -1162,17 +1169,14 @@ object TableVersions {
       rivalLogPollMs: Long = RivalLogPollMs,
       beforeClaim: () => Unit = () => ()
   ): Long = {
-    val prev = currentVersion(s, dir)
-    require(prev >= 0, s"$dir not initialized")
-    val adds = liveFileAdds(s, dir, prev)
+    val snap = headSnapshot(s, dir)
     // the file probe, the DV and the change rows all read the matched
     // rows: cached, and the probe fills the cache. A recompute on
     // eviction re-reads the same immutable files at the same positions.
-    val matched =
-      m.rows(applyDv(s, dir, prev, adds, readMerged(s, adds.map(_._1)), keepMeta = true)).cache()
+    val matched = m.rows(liveRows(s, snap, snap.paths, keepMeta = true)).cache()
     try {
       val hit = hitFiles(s, matched)
-      claimValidated(s, dir, "mor_delete", prev, Nil, Some(m), hit, rivalLogPollMs, beforeClaim) {
+      claimValidated(s, dir, "mor_delete", snap.version, Nil, Some(m), hit, rivalLogPollMs, beforeClaim) {
         st =>
           // two disjoint outputs of the same cached frame — concurrent
           // jobs (guide §2.6)
@@ -1183,7 +1187,7 @@ object TableVersions {
                   .select(
                     canonPathCol(col("__dv_file")).as("file"),
                     col("__dv_pos").as("pos"),
-                    lit(prev + 1).as("dv_version")
+                    lit(snap.version + 1).as("dv_version")
                   )
                   .coalesce(1)
                   .write
@@ -1201,30 +1205,23 @@ object TableVersions {
     } finally matched.unpersist(false)
   }
 
-  /** The DV rows applicable when reading at `v`, given the live files'
-    * add anchors — (file, pos) pairs to anti-join out; None when no DV
-    * can apply. Resolution is metadata-scale: the `_dv` listing is
-    * O(DV commits), the snapshot fold O(1) files, and the applicability
-    * join keys on the file column only. */
-  private def dvApplicable(
-      s: SparkSession,
-      dir: String,
-      v: Long,
-      adds: Seq[(String, Long)]
-  ): Option[DataFrame] = {
+  /** The DV rows applicable to the files of `snap` — (file, pos) pairs
+    * to anti-join out; None when no DV can apply. Resolution is
+    * metadata-scale: the `_dv` listing is O(DV commits), the snapshot
+    * fold O(1) files, and the applicability join keys on the file
+    * column only. */
+  private def dvApplicable(s: SparkSession, snap: Snapshot): Option[DataFrame] = {
     import s.implicits._
-    val ckpt = checkpoints(s, dir).filter(_ <= v).lastOption
-    val snapPath = ckpt.map(c => s"${ckptDir(dir)}/c$c/_dvsnap")
-    val fs = fsOf(s, dir)
+    val fs = fsOf(s, snap.dir)
     // existence probe only — applicability itself filters the
     // dv_version COLUMN, so [[vacuum]]'s fold can rewrite the
     // directory layout without touching this logic
-    val anyDv = fs.exists(new Path(dvDir(dir)))
-    val snap = snapPath.filter(p => fs.exists(new Path(p))).map { p =>
-      // snapshot fold applies only to files the snapshot itself
-      // resolved (lastAdd = c); a tail re-add overrides per file
-      val c = ckpt.get
-      val snapAnchored = adds.filter(_._2 == c).map(_._1)
+    val anyDv = fs.exists(new Path(dvDir(snap.dir)))
+    val fold = snap.checkpoint.map(c => c -> s"${ckptDir(snap.dir)}/c$c/_dvsnap")
+    val folded = fold.filter(cp => fs.exists(new Path(cp._2))).map { case (c, p) =>
+      // snapshot fold applies only to files the checkpoint itself
+      // resolved (addVersion = c); a tail re-add overrides per file
+      val snapAnchored = snap.files.filter(_.addVersion == c).map(_.path)
       s.read
         .parquet(p)
         .join(broadcast(snapAnchored.toDF("file")), Seq("file"), "left_semi")
@@ -1233,41 +1230,37 @@ object TableVersions {
     val tail =
       if (!anyDv) None
       else {
-        val addDf = broadcast(adds.toDF("file", "add_version"))
+        val addDf = broadcast(snap.files.map(f => (f.path, f.addVersion)).toDF("file", "add_version"))
         Some(
           s.read
             .option("recursiveFileLookup", "true")
-            .parquet(dvDir(dir))
-            .filter(col("dv_version") <= v && ckpt.map(c => col("dv_version") > c).getOrElse(lit(true)))
+            .parquet(dvDir(snap.dir))
+            .filter(
+              col("dv_version") <= snap.version &&
+                snap.checkpoint.map(c => col("dv_version") > c).getOrElse(lit(true))
+            )
             .join(addDf, Seq("file"))
             .filter(col("dv_version") > col("add_version"))
             .select("file", "pos")
         )
       }
-    (snap, tail) match {
+    (folded, tail) match {
       case (Some(a), Some(b)) => Some(a.unionByName(b))
       case (a, b)             => a.orElse(b)
     }
   }
 
-  /** Anti-join the applicable deletion vectors out of a files-read.
-    * `df` must be a plain parquet read of the live files; position
-    * identity comes from the parquet reader's `_metadata` (file path +
-    * row index — stable for immutable files). With `keepMeta` the
+  /** Anti-join the deletion vectors applicable to `snap`'s files out of
+    * `df`, a plain parquet read of those files; position identity comes
+    * from the parquet reader's `_metadata` (file path + row index —
+    * stable for immutable files). With `keepMeta` the
     * `__dv_file`/`__dv_pos` columns survive for callers that need
-    * position identity themselves ([[commitDeleteMor]]). */
-  private def applyDv(
-      s: SparkSession,
-      dir: String,
-      v: Long,
-      adds: Seq[(String, Long)],
-      df: DataFrame,
-      keepMeta: Boolean = false
-  ): DataFrame = {
+    * position identity themselves ([[deleteMor]], [[hitFiles]]). */
+  private def applyDv(snap: Snapshot, df: DataFrame, keepMeta: Boolean = false): DataFrame = {
     val withMeta = df
       .withColumn("__dv_file", col("_metadata.file_path"))
       .withColumn("__dv_pos", col("_metadata.row_index"))
-    val filtered = dvApplicable(s, dir, v, adds) match {
+    val filtered = dvApplicable(df.sparkSession, snap) match {
       case None => withMeta
       case Some(dv) =>
         withMeta.join(
@@ -1291,34 +1284,32 @@ object TableVersions {
     * like replaced data files until [[vacuum]]). No-op when no DV
     * applies at the head. */
   def compactMor(s: SparkSession, dir: String): Long = {
-    val prev = currentVersion(s, dir)
-    require(prev >= 0, s"$dir not initialized")
-    val adds = liveFileAdds(s, dir, prev)
-    val affected = dvApplicable(s, dir, prev, adds) match {
+    val snap = headSnapshot(s, dir)
+    val affected = dvApplicable(s, snap) match {
       case None     => Nil
       case Some(dv) => dv.select("file").distinct().collect().map(_.getString(0)).toSeq.sorted
     }
-    if (affected.isEmpty) return prev
-    val survivors = liveRows(s, dir, prev, adds, affected)
-    rewriteFiles(s, dir, "mor_compact", prev, affected) { out =>
+    if (affected.isEmpty) return snap.version
+    val survivors = liveRows(s, snap, affected)
+    rewriteFiles(s, dir, "mor_compact", snap.version, affected) { out =>
       survivors.write.mode("errorifexists").parquet(out)
     }
   }
 
-  /** `files` as of version `prev` (`adds` are its live files with
-    * their add anchors), deletion vectors applied: a maintenance
-    * rewrite must not materialize a merge-on-read-deleted row into a
-    * fresh file whose add anchor would outrank its vector. mergeSchema,
-    * so files of different schema eras keep every column. */
+  /** `files` of `snap`, deletion vectors applied: a rewrite must not
+    * match, or materialize into a fresh file whose add anchor would
+    * outrank its vector, a merge-on-read-deleted row. mergeSchema, so
+    * files of different schema eras keep every column (a plain read
+    * would adopt one file's schema and drop an added column from the
+    * rewritten rows). */
   private def liveRows(
       s: SparkSession,
-      dir: String,
-      prev: Long,
-      adds: Seq[(String, Long)],
-      files: Seq[String]
+      snap: Snapshot,
+      files: Seq[String],
+      keepMeta: Boolean = false
   ): DataFrame = {
     val wanted = files.toSet
-    applyDv(s, dir, prev, adds.filter(a => wanted(a._1)), readMerged(s, files))
+    applyDv(snap.where(wanted), readMerged(s, files), keepMeta)
   }
 
   /** The shared commit of the maintenance rewrites ([[optimize]],
@@ -1413,18 +1404,11 @@ object TableVersions {
       c: String,
       value: String
   ): DataFrame = {
-    val horizon = retentionHorizon(s, dir)
-    require(v >= horizon, s"version $v of $dir was vacuumed (retention horizon is $horizon)")
-    val adds = liveFileAdds(s, dir, v)
-    require(adds.nonEmpty, s"version $v of $dir has no live files")
+    val snap = readable(s, dir, v)
     val seg = s"/__p_$c="
     val want = s"$seg${escapePathSegment(value)}/"
-    val candidates = adds.filter { case (f, _) => !f.contains(seg) || f.contains(want) }
-    val pred = col(c).cast("string") === lit(value)
-    if (candidates.isEmpty)
-      s.read.parquet(adds.head._1).filter(pred).filter(lit(false))
-    else
-      applyDv(s, dir, v, candidates, s.read.parquet(candidates.map(_._1): _*)).filter(pred)
+    val keep = (f: String) => !f.contains(seg) || f.contains(want)
+    scan(s.read, snap, keep, Some(_ => col(c).cast("string") === lit(value)))
   }
 
   // ------------------------------------------------------------------
@@ -1491,19 +1475,14 @@ object TableVersions {
     */
   def optimizeBucketed(s: SparkSession, dir: String, key: String, nBuckets: Int): Long = {
     require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
-    val prev = currentVersion(s, dir)
-    require(prev >= 0, s"$dir not initialized")
-    val adds = liveFileAdds(s, dir, prev)
-    val nonConforming = adds
-      .map(_._1)
-      .filterNot {
-        case BucketSeg(_, n) => n.toInt == nBuckets
-        case _               => false
-      }
-      .sorted
-    if (nonConforming.isEmpty) return prev
-    val rows = liveRows(s, dir, prev, adds, nonConforming)
-    rewriteFiles(s, dir, "optimize", prev, nonConforming) { out =>
+    val snap = headSnapshot(s, dir)
+    val nonConforming = snap.paths.filterNot {
+      case BucketSeg(_, n) => n.toInt == nBuckets
+      case _               => false
+    }
+    if (nonConforming.isEmpty) return snap.version
+    val rows = liveRows(s, snap, nonConforming)
+    rewriteFiles(s, dir, "optimize", snap.version, nonConforming) { out =>
       rows
         .withColumn("__bucket", bucketCol(key, nBuckets))
         .repartition(nBuckets, col("__bucket"))
@@ -1528,26 +1507,22 @@ object TableVersions {
       key: String,
       value: Any
   ): DataFrame = {
-    val horizon = retentionHorizon(s, dir)
-    require(v >= horizon, s"version $v of $dir was vacuumed (retention horizon is $horizon)")
-    val adds = liveFileAdds(s, dir, v)
-    require(adds.nonEmpty, s"version $v of $dir has no live files")
-    // one 1-row local evaluation gives the engine's OWN hash of the
-    // probe value — no reimplementation of Murmur3 to drift out of sync
-    val h = s.range(1).select(hash(lit(value))).head().getInt(0)
-    val candidates = adds.filter { case (f, _) =>
-      f match {
-        case BucketSeg(b, n) =>
-          val m = n.toInt
-          ((h % m) + m) % m == b.toInt
-        case _ => true // unbucketed commit: always read
-      }
+    val snap = readable(s, dir, v)
+    val h = bucketHash(value)
+    val keep: String => Boolean = {
+      case BucketSeg(b, n) => Math.floorMod(h, n.toInt) == b.toInt
+      case _               => true // unbucketed commit: always read
     }
-    val pred = col(key) === lit(value)
-    if (candidates.isEmpty)
-      s.read.parquet(adds.head._1).filter(pred).filter(lit(false))
-    else
-      applyDv(s, dir, v, candidates, s.read.parquet(candidates.map(_._1): _*)).filter(pred)
+    scan(s.read, snap, keep, Some(_ => col(key) === lit(value)))
+  }
+
+  /** The engine's OWN `hash()` of a probe value — Catalyst's Murmur3
+    * expression with `hash()`'s seed, evaluated on the driver over the
+    * literal `lit(value)` would build: no reimplementation of Murmur3 to
+    * drift out of sync, and no Spark job. */
+  private[operators] def bucketHash(value: Any): Int = {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash}
+    Murmur3Hash(Seq(Literal(value)), 42).eval().asInstanceOf[Int]
   }
 
   // ------------------------------------------------------------------
@@ -1669,15 +1644,12 @@ object TableVersions {
   def optimizeTransformed(s: SparkSession, dir: String, c: String, transform: String): Long = {
     // validate the transform name before touching anything
     transformBucket(transform, if (transform.startsWith("trunc")) "0" else "1970-01-01")
-    val prev = currentVersion(s, dir)
-    require(prev >= 0, s"$dir not initialized")
-    val adds = liveFileAdds(s, dir, prev)
-    val want = s"/${transformPartCol(transform, c)}="
-    val nonConforming = adds.map(_._1).filterNot(_.contains(want)).sorted
-    if (nonConforming.isEmpty) return prev
+    val snap = headSnapshot(s, dir)
     val pcol = transformPartCol(transform, c)
-    val rows = liveRows(s, dir, prev, adds, nonConforming)
-    rewriteFiles(s, dir, "optimize", prev, nonConforming) { out =>
+    val nonConforming = snap.paths.filterNot(_.contains(s"/$pcol="))
+    if (nonConforming.isEmpty) return snap.version
+    val rows = liveRows(s, snap, nonConforming)
+    rewriteFiles(s, dir, "optimize", snap.version, nonConforming) { out =>
       rows
         .withColumn(pcol, transformExpr(transform, c))
         // ~one output file per bucket; the pinned count keeps the
@@ -1709,28 +1681,19 @@ object TableVersions {
       lo: String,
       hi: String
   ): DataFrame = {
-    val horizon = retentionHorizon(s, dir)
-    require(v >= horizon, s"version $v of $dir was vacuumed (retention horizon is $horizon)")
-    val adds = liveFileAdds(s, dir, v)
-    require(adds.nonEmpty, s"version $v of $dir has no live files")
+    val snap = readable(s, dir, v)
     val re = (".*/__t_([a-z]+[0-9]*)_" +
       java.util.regex.Pattern.quote(c) + "=(-?\\d+)/.*").r
-    val candidates = adds.filter { case (f, _) =>
-      f match {
-        case re(tname, value) =>
-          val b = value.toLong
-          b >= transformBucket(tname, lo) && b <= transformBucket(tname, hi)
-        case _ => true // no transform segment for c: always read
-      }
+    val keep: String => Boolean = {
+      case re(tname, value) =>
+        val b = value.toLong
+        b >= transformBucket(tname, lo) && b <= transformBucket(tname, hi)
+      case _ => true // no transform segment for c: always read
     }
-    def preciseFilter(df: DataFrame): DataFrame = {
+    scan(s.read, snap, keep, Some { df =>
       val dt = df.schema(c).dataType
-      df.filter(col(c) >= lit(lo).cast(dt) && col(c) <= lit(hi).cast(dt))
-    }
-    if (candidates.isEmpty)
-      preciseFilter(s.read.parquet(adds.head._1)).filter(lit(false))
-    else
-      preciseFilter(applyDv(s, dir, v, candidates, s.read.parquet(candidates.map(_._1): _*)))
+      col(c) >= lit(lo).cast(dt) && col(c) <= lit(hi).cast(dt)
+    })
   }
 
   // ------------------------------------------------------------------
@@ -1788,16 +1751,14 @@ object TableVersions {
     * readVersion(v).count() at every version.
     */
   def countAt(s: SparkSession, dir: String, v: Long): Long = {
-    val meta = liveFileMeta(s, dir, v)
-    require(meta.nonEmpty, s"version $v of $dir has no live files")
+    val snap = snapshot(s, dir, v)
+    require(snap.files.nonEmpty, s"version $v of $dir has no live files")
     // counts come from the LOG (every add logged its file's rows at
     // commit time, checkpoints carry them forward) — pure metadata,
     // no data-file open at any file count; only files logged before
     // counts existed pay the footer fallback
-    val total = meta.map { case (f, _, n) => n.getOrElse(footerRecordCount(s, f)) }.sum
-    val deleted =
-      dvApplicable(s, dir, v, meta.map(t => (t._1, t._2))).map(_.count()).getOrElse(0L)
-    total - deleted
+    val total = snap.files.map(f => f.nRows.getOrElse(footerRecordCount(s, f.path))).sum
+    total - dvApplicable(s, snap).map(_.count()).getOrElse(0L)
   }
 
   /** DESCRIBE HISTORY: one row per commit — (version, op, n_add,
@@ -1916,11 +1877,7 @@ object TableVersions {
       lo: Double,
       hi: Double
   ): DataFrame = {
-    val horizon = retentionHorizon(s, dir)
-    require(v >= horizon, s"version $v of $dir was vacuumed (retention horizon is $horizon)")
-    val adds = liveFileAdds(s, dir, v)
-    val files = adds.map(_._1)
-    require(files.nonEmpty, s"version $v of $dir has no live files")
+    val snap = readable(s, dir, v)
     val fs = fsOf(s, dir)
     val ranges: Map[String, (Option[Double], Option[Double])] =
       if (!fs.exists(new Path(statsDir(dir)))) Map.empty
@@ -1936,21 +1893,13 @@ object TableVersions {
             )
           )
           .toMap
-    val candidates = files.filter { f =>
+    val keep = (f: String) =>
       ranges.get(f) match {
-        case None                           => true // no stats — must read
-        case Some((Some(flo), Some(fhi)))   => fhi >= lo && flo <= hi
-        case Some(_)                        => false // all-NULL column: no row matches a range
+        case None                         => true // no stats — must read
+        case Some((Some(flo), Some(fhi))) => fhi >= lo && flo <= hi
+        case Some(_)                      => false // all-NULL column: no row matches a range
       }
-    }
-    val pred = col(c) >= lo && col(c) <= hi
-    if (candidates.isEmpty)
-      // nothing can match; keep the schema (and correctness) by
-      // filtering an arbitrary live file down to zero rows
-      s.read.parquet(files.head).filter(pred).filter(lit(false))
-    else
-      applyDv(s, dir, v, adds.filter(a => candidates.contains(a._1)),
-        s.read.parquet(candidates: _*)).filter(pred)
+    scan(s.read, snap, keep, Some(_ => col(c) >= lo && col(c) <= hi))
   }
 
   private def bloomDir(dir: String) = s"$dir/_bloom"
@@ -2118,20 +2067,12 @@ object TableVersions {
       c: String,
       value: String
   ): DataFrame = {
-    val horizon = retentionHorizon(s, dir)
-    require(v >= horizon, s"version $v of $dir was vacuumed (retention horizon is $horizon)")
-    val adds = liveFileAdds(s, dir, v)
-    val files = adds.map(_._1)
-    require(files.nonEmpty, s"version $v of $dir has no live files")
-    val pred = col(c).cast("string") === lit(value)
+    val snap = readable(s, dir, v)
     val hasRows = Option(
       fsOf(s, dir).globStatus(new Path(s"${bloomDir(dir)}/*.parquet"))
     ).exists(_.nonEmpty)
-    bloomMeta(s, dir) match {
-      case None => applyDv(s, dir, v, adds, s.read.parquet(files: _*)).filter(pred)
-      case Some(_) if !hasRows =>
-        applyDv(s, dir, v, adds, s.read.parquet(files: _*)).filter(pred)
-      case Some((bits, hashes)) =>
+    val keep: String => Boolean = bloomMeta(s, dir) match {
+      case Some((bits, hashes)) if hasRows =>
         val probe = (0 until hashes).map(j => bloomBit(j, value, bits)).distinct
         val rows = s.read
           .parquet(bloomDir(dir))
@@ -2145,18 +2086,14 @@ object TableVersions {
           .collect()
           .map(r => r.getString(0) -> (r.getInt(1) == 1, r.getLong(2)))
           .toMap
-        val candidates = files.filter { f =>
+        f =>
           rows.get(f) match {
             case Some((true, hits)) => hits == probe.size.toLong
             case _                  => true // unindexed — must read
           }
-        }
-        if (candidates.isEmpty)
-          s.read.parquet(files.head).filter(pred).filter(lit(false))
-        else
-          applyDv(s, dir, v, adds.filter(a => candidates.contains(a._1)),
-            s.read.parquet(candidates: _*)).filter(pred)
+      case _ => _ => true // no bloom index: read every file
     }
+    scan(s.read, snap, keep, Some(_ => col(c).cast("string") === lit(value)))
   }
 
   /** MERGE INTO — whole-row upsert keyed on `key`: every source row
@@ -2189,13 +2126,10 @@ object TableVersions {
       beforeClaim: () => Unit = () => ()
   ): Long = {
     val s = source.sparkSession
-    val prev = currentVersion(s, dir)
-    require(prev >= 0, s"$dir not initialized")
-    val adds = liveFileAdds(s, dir, prev)
-    // mergeSchema for the same reason as [[rewriteCow]]: an evolved
-    // table's merge must align against the UNION schema; DVs applied
-    // so deleted rows neither match nor survive into the rewrite
-    val target = applyDv(s, dir, prev, adds, readMerged(s, adds.map(_._1)), keepMeta = true)
+    val snap = headSnapshot(s, dir)
+    // an evolved table's merge aligns against the UNION schema
+    // ([[liveRows]]); deleted rows neither match nor survive
+    val target = liveRows(s, snap, snap.paths, keepMeta = true)
     val targetCols = target.columns.filterNot(Set("__dv_file", "__dv_pos")).toSeq
     // align the source to the target's column order so every data file
     // in the table carries one physical schema. CACHED: the caller's
@@ -2231,13 +2165,9 @@ object TableVersions {
       val hitRows =
         if (hit.isEmpty) None
         else
-          Some(
-            applyDv(s, dir, prev, adds.filter(a => hit(a._1)), readMerged(s, hit.toSeq.sorted))
-              .select(targetCols.map(col): _*)
-              .cache()
-          )
+          Some(liveRows(s, snap, hit.toSeq.sorted).select(targetCols.map(col): _*).cache())
       try {
-        claimValidated(s, dir, "merge", prev, hit.toSeq.sorted, Some(m), beforeClaim = beforeClaim) {
+        claimValidated(s, dir, "merge", snap.version, hit.toSeq.sorted, Some(m), beforeClaim = beforeClaim) {
           st =>
             val replaced = hitRows.map(m.rest(_).unionByName(alignedSource)).getOrElse(alignedSource)
             // change-data feed: matched keys carry pre- and post-images,
@@ -2292,17 +2222,15 @@ object TableVersions {
       targetBytes: Long,
       beforeClaim: () => Unit = () => ()
   ): Long = {
-    val prev = currentVersion(s, dir)
-    require(prev >= 0, s"$dir not initialized")
+    val snap = headSnapshot(s, dir)
     val fs = fsOf(s, dir)
-    val adds = liveFileAdds(s, dir, prev)
-    val sized = adds.map { case (f, _) => f -> fs.getFileStatus(new Path(f)).getLen }
+    val sized = snap.paths.map(f => f -> fs.getFileStatus(new Path(f)).getLen)
     val small = sized.filter(_._2 < smallBytes).map(_._1).sorted
-    if (small.size < 2) return prev
+    if (small.size < 2) return snap.version
     val total = sized.filter(s => small.contains(s._1)).map(_._2).sum
     val nOut = math.max(1L, (total + targetBytes - 1) / targetBytes).toInt
-    val rows = liveRows(s, dir, prev, adds, small)
-    rewriteFiles(s, dir, "optimize", prev, small, beforeClaim) { out =>
+    val rows = liveRows(s, snap, small)
+    rewriteFiles(s, dir, "optimize", snap.version, small, beforeClaim) { out =>
       rows.repartition(nOut).write.mode("errorifexists").parquet(out)
     }
   }
@@ -2615,7 +2543,7 @@ object TableVersions {
       if (!fs.exists(p)) 0L
       else
         // skipping-index tables are tiny metadata — driver-side read,
-        // no Spark job (same rationale as liveFileMeta)
+        // no Spark job (same rationale as [[snapshot]])
         readParquetRowsLocal(s, table)
           .count(g => !live.contains(qualifiedStr(s, groupString(g, "file"))))
           .toLong
@@ -2780,9 +2708,8 @@ object TableVersions {
       cols: Seq[String],
       nOut: Int
   ): Long = {
-    val prev = currentVersion(s, dir)
-    require(prev >= 0, s"$dir not initialized")
-    zorderRewrite(s, dir, cols, nOut, prev, liveFiles(s, dir, prev))
+    val snap = headSnapshot(s, dir)
+    zorderRewrite(s, dir, cols, nOut, snap, snap.paths)
   }
 
   /** Incremental OPTIMIZE ZORDER — the 100 TB cadence: cluster at most
@@ -2806,17 +2733,16 @@ object TableVersions {
       maxFiles: Int
   ): Long = {
     require(maxFiles >= 2, "incremental zorder needs at least two files per pass")
-    val prev = currentVersion(s, dir)
-    require(prev >= 0, s"$dir not initialized")
+    val snap = headSnapshot(s, dir)
     val fs = fsOf(s, dir)
-    val subset = liveFiles(s, dir, prev)
+    val subset = snap.paths
       .map(f => f -> fs.getFileStatus(new Path(f)).getLen)
       .sortBy { case (f, len) => (len, f) }
       .take(maxFiles)
       .map(_._1)
       .sorted
-    if (subset.size < 2) return prev
-    zorderRewrite(s, dir, cols, nOut, prev, subset)
+    if (subset.size < 2) return snap.version
+    zorderRewrite(s, dir, cols, nOut, snap, subset)
   }
 
   /** OPTIMIZE HILBERT — [[optimizeZorder]]'s sibling on the Hilbert
@@ -2825,9 +2751,8 @@ object TableVersions {
     * native rotation-state `hilbert_2d`; 3-4 columns the native
     * Skilling transpose `hilbert_nd` ([[graft.functions.HilbertIndex]]). */
   def optimizeHilbert(s: SparkSession, dir: String, cols: Seq[String], nOut: Int): Long = {
-    val prev = currentVersion(s, dir)
-    require(prev >= 0, s"$dir not initialized")
-    zorderRewrite(s, dir, cols, nOut, prev, liveFiles(s, dir, prev), curve = "hilbert")
+    val snap = headSnapshot(s, dir)
+    zorderRewrite(s, dir, cols, nOut, snap, snap.paths, curve = "hilbert")
   }
 
   /** The shared z-order rewrite: cluster exactly `files` along the
@@ -2838,13 +2763,13 @@ object TableVersions {
       dir: String,
       cols: Seq[String],
       nOut: Int,
-      prev: Long,
+      snap: Snapshot,
       files: Seq[String],
       curve: String = "morton"
   ): Long = {
     require(cols.size >= 2, "zorder needs at least two columns (else sort plainly)")
     require(cols.size <= 4, "the bigint interleave supports at most 4 columns")
-    val df = liveRows(s, dir, prev, liveFileAdds(s, dir, prev), files)
+    val df = liveRows(s, snap, files)
     // Numeric view per clustered column: numeric columns cast to
     // double; STRING columns project their first 6 UTF-8 bytes as a
     // big-endian integer (right-padded, so the projection is
@@ -2900,7 +2825,7 @@ object TableVersions {
       if (curve == "hilbert" && n == 2) s"hilbert_2d($bitsPer, ${scaled(0)}, ${scaled(1)})"
       else if (curve == "hilbert") s"hilbert_nd($bitsPer, ${scaled.mkString(", ")})"
       else s"morton_nd($bitsPer, ${scaled.mkString(", ")})"
-    rewriteFiles(s, dir, if (curve == "hilbert") "hilbert" else "zorder", prev, files) { out =>
+    rewriteFiles(s, dir, if (curve == "hilbert") "hilbert" else "zorder", snap.version, files) { out =>
       df.withColumn("__z", expr(zExpr))
         .repartitionByRange(nOut, col("__z"))
         .sortWithinPartitions("__z")
@@ -3039,9 +2964,8 @@ object TableVersions {
       v >= horizon,
       s"version $v of $srcDir was vacuumed (retention horizon is $horizon) — cannot clone"
     )
-    val meta = liveFileMeta(s, srcDir, v)
-    val files = meta.map(_._1)
-    require(files.nonEmpty, s"version $v of $srcDir has no live files")
+    val snap = snapshot(s, srcDir, v)
+    require(snap.files.nonEmpty, s"version $v of $srcDir has no live files")
     claimVersion(s, dstDir, 0L)
     // row counts ride over from the source log — the clone stays
     // metadata-only (no footer opens) for count-carrying sources
@@ -3050,9 +2974,9 @@ object TableVersions {
       dstDir,
       0L,
       "clone",
-      files,
+      snap.paths,
       Nil,
-      knownCounts = meta.collect { case (f, _, Some(n)) => f -> n }.toMap
+      knownCounts = snap.files.collect { case LiveFile(f, _, Some(n)) => f -> n }.toMap
     )
     0L
   }
@@ -3208,7 +3132,7 @@ object TableVersions {
     * mistake-window versions stay readable between `to` and the
     * restore commit — and CDC across the restore reports exactly the
     * logical rollback. Files re-added here are why liveness is
-    * last-action-wins ([[liveFiles]]) and why [[vacuum]] checks for
+    * last-action-wins ([[snapshot]]) and why [[vacuum]] checks for
     * revival. Requires `to` at or above the retention horizon (its
     * files must still exist physically). Restoring to the current
     * head is a recorded no-op commit.
@@ -3224,8 +3148,8 @@ object TableVersions {
     )
     val v = cur + 1
     claimVersion(s, dir, v)
-    val targetMeta = liveFileMeta(s, dir, to)
-    val target = targetMeta.map(_._1).toSet
+    val targetSnap = snapshot(s, dir, to)
+    val target = targetSnap.paths.toSet
     val head = liveFiles(s, dir, cur).toSet
     // re-added files re-log the counts resolved at the target version
     // — the restore stays metadata-only (no footer opens)
@@ -3236,7 +3160,7 @@ object TableVersions {
       "restore",
       (target -- head).toSeq.sorted,
       (head -- target).toSeq.sorted,
-      knownCounts = targetMeta.collect { case (f, _, Some(n)) => f -> n }.toMap
+      knownCounts = targetSnap.files.collect { case LiveFile(f, _, Some(n)) => f -> n }.toMap
     )
     v
   }

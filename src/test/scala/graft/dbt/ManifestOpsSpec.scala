@@ -1,12 +1,8 @@
 package graft.dbt
 
-import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{IntegerType, StringType}
-import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.time.{Millis, Seconds, Span}
 import graft.SparkSpec
 
 class ManifestOpsSpec extends AnyFunSuite with SparkSpec {
@@ -83,34 +79,6 @@ class ManifestOpsSpec extends AnyFunSuite with SparkSpec {
       fields(ManifestOps.impacted(manifest, DbtArtifacts.readManifest(spark, s"$dir/manifest_v2.json"))) ==
         Seq(("changed_id", StringType, true), ("impacted_id", StringType, true), ("hops", IntegerType, false))
     )
-  }
-
-  /** Spark jobs that `body` starts. A job group tags them; a marker job
-    * in a group of its own runs after `body`, and once the listener has
-    * seen it, it has seen every job before it (the listener bus hands
-    * one listener its events in order). */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"counted-${java.util.UUID.randomUUID}"
-    val marker = s"marker-$group"
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      try body
-      finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "marker")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.clearJobGroup()
-      eventually(timeout(Span(30, Seconds)), interval(Span(50, Millis))) {
-        assert(groups.contains(marker), "the listener bus has not drained")
-      }
-      groups.asScala.count(_ == group)
-    } finally sc.removeSparkListener(listener)
   }
 
   test("graph searches run as many Spark jobs on a 9-hop chain as on a 2-hop chain") {

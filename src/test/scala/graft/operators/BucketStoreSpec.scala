@@ -104,4 +104,15 @@ class BucketStoreSpec extends AnyFunSuite with SparkSpec {
     // reclustering a conforming layout is a recorded no-op (prev returned)
     assert(TableVersions.optimizeBucketed(spark, dir, "id", 8) == v4)
   }
+
+  test("the driver-side probe hash equals Spark's hash() for Int, Long, String and Date probes") {
+    val probes: Seq[Any] = Seq(0, 42, -7, Int.MaxValue, 0L, 42L, -7L, Long.MinValue, "", "42", "doc7",
+      java.sql.Date.valueOf("1970-01-01"), java.sql.Date.valueOf("2024-02-29"))
+    probes.foreach { v =>
+      val engine = spark.range(1).select(hash(lit(v))).head().getInt(0)
+      assert(TableVersions.bucketHash(v) == engine, s"probe $v (${v.getClass.getSimpleName})")
+    }
+    // the type matters, as it does for the commit's hash of the column
+    assert(TableVersions.bucketHash(42) != TableVersions.bucketHash(42L))
+  }
 }
