@@ -2,19 +2,20 @@ package graft.operators
 
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
+import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.spark.sql.SparkSession
 
 /** Driver-side parquet Group reads for TINY MODEL / METADATA tables —
   * the engine's own k-row artifacts (IVF centroids, PQ codebooks,
-  * 1-row index meta). Loading one of these through a Spark job paid a
-  * full schema inference + job submission + collect round trip
-  * (~100-200 ms) per call, and the probe/append paths load several of
-  * them per invocation; the rows are driver-side literals immediately
-  * after anyway (they fold into the plan as constants), so nothing
-  * about the data plane changes — this is the same discipline as
-  * TableVersions' driver-side commit-log reads (guide §1.2: the
-  * orchestration, not the plan, was the cost). NEVER used for data:
-  * callers read O(k·dim) model rows this engine wrote itself.
+  * 1-row index meta; the version store's log, checkpoint file lists,
+  * stats, bloom and constraint tables). Loading one of these through a
+  * Spark job paid a full schema inference + job submission + collect
+  * round trip (~100-200 ms) per call, and the probe/append paths load
+  * several of them per invocation; the rows are driver-side literals
+  * immediately after anyway (they fold into the plan as constants), so
+  * nothing about the data plane changes (guide §1.2: the orchestration,
+  * not the plan, was the cost). NEVER used for data: callers read
+  * metadata and O(k·dim) model rows this engine wrote itself.
   *
   * Value fidelity: parquet stores these columns as INT32/INT64/
   * BOOLEAN/DOUBLE and Spark's standard 3-level LIST layout; the Group
@@ -23,8 +24,10 @@ import org.apache.spark.sql.SparkSession
   */
 private[operators] object LocalParquet {
 
-  /** Every row of every `part-*.parquet` under `dirPath`. */
-  def rows(s: SparkSession, dirPath: String): Seq[Group] = {
+  /** Every row of every `part-*.parquet` under `dirPath` that `filter`
+    * keeps — a parquet record filter, so rows it drops are never
+    * assembled. */
+  def rows(s: SparkSession, dirPath: String, filter: FilterCompat.Filter = FilterCompat.NOOP): Seq[Group] = {
     val conf = s.sparkContext.hadoopConfiguration
     val p = new Path(dirPath)
     val fs = p.getFileSystem(conf)
@@ -37,6 +40,7 @@ private[operators] object LocalParquet {
         val reader = org.apache.parquet.hadoop.ParquetReader
           .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), f)
           .withConf(conf)
+          .withFilter(filter)
           .build()
         try Iterator.continually(reader.read()).takeWhile(_ != null).toVector
         finally reader.close()

@@ -1,6 +1,9 @@
 package graft.operators
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
+import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -513,7 +516,7 @@ object TableVersions {
     val base = checkpoints(s, dir).filter(_ <= v).lastOption
     val resolved = base match {
       case Some(c) =>
-        val snap = readParquetRowsLocal(s, s"${ckptDir(dir)}/c$c").map { g =>
+        val snap = LocalParquet.rows(s, s"${ckptDir(dir)}/c$c").map { g =>
           (groupString(g, "file"), c, "add", groupLong(g, "n_rows"))
         }
         if (c == v) snap.map { case (f, ver, _, n) => LiveFile(f, ver, n) }
@@ -546,7 +549,7 @@ object TableVersions {
       .filter(v => v >= loV && v <= hiV)
       .sorted
       .flatMap { v =>
-        readParquetRowsLocal(s, s"${logDir(dir)}/version=$v").map { g =>
+        LocalParquet.rows(s, s"${logDir(dir)}/version=$v").map { g =>
           (groupString(g, "op"), groupString(g, "file"), groupString(g, "action"),
             groupLong(g, "n_rows"), v)
         }
@@ -558,35 +561,6 @@ object TableVersions {
   private def groupLong(g: org.apache.parquet.example.data.Group, f: String): Option[Long] =
     if (g.getType.containsField(f) && g.getFieldRepetitionCount(f) > 0) Some(g.getLong(f, 0))
     else None
-
-  /** Every row of every `part-*.parquet` under `dirPath`, read with the
-    * parquet Group API on the driver — for the store's own tiny
-    * metadata files only (commit log, checkpoint file lists), never
-    * data. */
-  private def readParquetRowsLocal(
-      s: SparkSession,
-      dirPath: String
-  ): Seq[org.apache.parquet.example.data.Group] = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val fs = fsOf(s, dirPath)
-    fs.listStatus(new Path(dirPath))
-      .toSeq
-      .map(_.getPath)
-      .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-      .sortBy(_.getName)
-      .flatMap { p =>
-        val reader = org.apache.parquet.hadoop.ParquetReader
-          .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), p)
-          .withConf(conf)
-          .build()
-        try
-          Iterator
-            .continually(reader.read())
-            .takeWhile(_ != null)
-            .toVector
-        finally reader.close()
-      }
-  }
 
   /** The snapshot a read serves: refused below the vacuum horizon
     * (the data is physically gone — fail with the boundary, not a
@@ -1868,6 +1842,7 @@ object TableVersions {
     * Skipping decisions: a file with no stats row is READ (absence is
     * never wrong); a file whose stats are NULL (all-NULL column) is
     * SKIPPED — correct for a range predicate, which no NULL satisfies.
+    * The stats rows are read on the driver ([[LocalParquet]]).
     */
   def readVersionPruned(
       s: SparkSession,
@@ -1879,19 +1854,16 @@ object TableVersions {
   ): DataFrame = {
     val snap = readable(s, dir, v)
     val fs = fsOf(s, dir)
+    // the stats rows of column c, read on the driver: a metadata table
+    // of one row per (file, column)
+    def bound(g: org.apache.parquet.example.data.Group, f: String): Option[Double] =
+      if (g.getFieldRepetitionCount(f) > 0) Some(g.getDouble(f, 0)) else None
     val ranges: Map[String, (Option[Double], Option[Double])] =
       if (!fs.exists(new Path(statsDir(dir)))) Map.empty
       else
-        s.read
-          .parquet(statsDir(dir))
-          .filter(col("col") === c)
-          .collect()
-          .map(r =>
-            r.getString(0) -> (
-              (if (r.isNullAt(2)) None else Some(r.getDouble(2))),
-              (if (r.isNullAt(3)) None else Some(r.getDouble(3)))
-            )
-          )
+        LocalParquet
+          .rows(s, statsDir(dir), FilterCompat.get(FilterApi.eq(FilterApi.binaryColumn("col"), Binary.fromString(c))))
+          .map(g => groupString(g, "file") -> (bound(g, "lo"), bound(g, "hi")))
           .toMap
     val keep = (f: String) =>
       ranges.get(f) match {
@@ -2058,7 +2030,8 @@ object TableVersions {
     * The equality filter is re-applied to surviving rows, so the
     * result equals `readVersion(v).filter(c = value)` exactly. The
     * bloom probe reads ONLY the probe-bit and marker rows of the bit
-    * table (a metadata-scale filter), never the data.
+    * table, on the driver through a parquet record filter, never the
+    * data: planning the read starts no Spark job beyond the scan's.
     */
   def readVersionPoint(
       s: SparkSession,
@@ -2074,21 +2047,21 @@ object TableVersions {
     val keep: String => Boolean = bloomMeta(s, dir) match {
       case Some((bits, hashes)) if hasRows =>
         val probe = (0 until hashes).map(j => bloomBit(j, value, bits)).distinct
-        val rows = s.read
-          .parquet(bloomDir(dir))
-          .filter(col("col") === c)
-          .filter(col("bit") === -1 || col("bit").isin(probe: _*))
-          .groupBy("file")
-          .agg(
-            max(when(col("bit") === -1, 1).otherwise(0)).as("indexed"),
-            countDistinct(when(col("bit") =!= -1, col("bit"))).as("hits")
-          )
-          .collect()
-          .map(r => r.getString(0) -> (r.getInt(1) == 1, r.getLong(2)))
-          .toMap
+        // the marker and probe-bit rows of column c, read on the driver
+        // through a parquet record filter: the rest of the bit table is
+        // never assembled
+        val bit = FilterApi.intColumn("bit")
+        val wanted = FilterApi.and(
+          FilterApi.eq(FilterApi.binaryColumn("col"), Binary.fromString(c)),
+          (-1 +: probe).map(b => FilterApi.eq(bit, Int.box(b)): FilterPredicate).reduce(FilterApi.or(_, _))
+        )
+        val bitsOf = LocalParquet
+          .rows(s, bloomDir(dir), FilterCompat.get(wanted))
+          .groupMap(g => groupString(g, "file"))(_.getInteger("bit", 0))
+          .map { case (f, bs) => f -> bs.toSet }
         f =>
-          rows.get(f) match {
-            case Some((true, hits)) => hits == probe.size.toLong
+          bitsOf.get(f) match {
+            case Some(bs) if bs(-1) => probe.forall(bs) // indexed: a candidate iff every probe bit is set
             case _                  => true // unindexed — must read
           }
       case _ => _ => true // no bloom index: read every file
@@ -2097,17 +2070,26 @@ object TableVersions {
   }
 
   /** MERGE INTO — whole-row upsert keyed on `key`: every source row
-    * REPLACES the target row with its key when one exists (matched →
+    * REPLACES the target rows with its key when any exist (matched →
     * update) and lands as a new row otherwise (not-matched → insert),
     * in ONE commit. Copy-on-write discipline as [[commitUpdate]]:
     * only files CONTAINING matched keys are rewritten (their unmatched
     * rows re-land in the new batch beside the whole source), so commit
-    * cost scales with the data actually hit plus the source — the
-    * Delta-style "find touched files via join, rewrite only those"
-    * plan. The touched-file probe is a key-only semi join ([[InKeys]]):
-    * it shuffles (key, file) pairs, never row payloads. A source with
-    * duplicate keys is ambiguous (which row wins?) and fails loudly,
-    * matching the standard multiple-rows-matched MERGE error.
+    * cost scales with the data actually hit plus the source. Two
+    * passes, Delta's MERGE plan:
+    *  1. KEY PROBE: a key-only semi join ([[InKeys]]) of the source's
+    *     keys against the target finds the hit files; it shuffles
+    *     (key, file) pairs, never row payloads.
+    *  2. CLASSIFY: the hit files' rows and the source meet in one
+    *     exchange on the key, which marks every row whose key the
+    *     other side holds. The change feed (matched target rows as
+    *     `update_preimage`, matched source rows as `update_postimage`,
+    *     the rest of the source as `insert`) and the batch (the whole
+    *     source plus the unmatched hit rows) are both written from that
+    *     one cached frame, in the target's column order.
+    * A source with duplicate or NULL keys is ambiguous (which row
+    * wins? a NULL never matches) and fails loudly, matching the
+    * standard multiple-rows-matched MERGE error.
     */
   def commitMerge(source: DataFrame, dir: String, key: String): Long =
     mergeUpsert(source, dir, key)
@@ -2130,11 +2112,12 @@ object TableVersions {
     // an evolved table's merge aligns against the UNION schema
     // ([[liveRows]]); deleted rows neither match nor survive
     val target = liveRows(s, snap, snap.paths, keepMeta = true)
-    val targetCols = target.columns.filterNot(Set("__dv_file", "__dv_pos")).toSeq
+    val dataSchema = target.drop("__dv_file", "__dv_pos").schema
+    val targetCols = dataSchema.fieldNames.toSeq
     // align the source to the target's column order so every data file
     // in the table carries one physical schema. CACHED: the caller's
     // source plan is consumed by the validation agg, the hit probe, the
-    // CDF and batch writes and any rival's key probe — evaluating it per
+    // classify pass and any rival's key probe — evaluating it per
     // action paid the whole upstream plan (often a feed window + view
     // read + groupBy) once per consumer (guide §2.4/§5). The validation
     // agg is the first action, so it fills the cache. A cache, not a
@@ -2159,36 +2142,47 @@ object TableVersions {
       )
       enforceConstraints(alignedSource, dir, "merge")
       val m = InKeys(alignedSource.select(col(key)), key)
-      val hit = hitFiles(s, m.rows(target))
-      // the hit files feed the keep side AND the CDF pre-images —
-      // cached so they are read (and DV-anti-joined) once
-      val hitRows =
-        if (hit.isEmpty) None
+      val hit = hitFiles(s, m.rows(target)).toSeq.sorted
+      // ONE classify pass: hit rows (side 0) beside the source (side 1),
+      // a key window telling each row whether the other side holds its
+      // key. A NULL-key target row never meets a source row (the source
+      // has none), so it survives; every duplicate-key copy of a matched
+      // key is a pre-image. CACHED: the change feed and the batch are
+      // both written from it.
+      val incoming = alignedSource.withColumn("__side", lit(1))
+      val sides =
+        if (hit.isEmpty) incoming
         else
-          Some(liveRows(s, snap, hit.toSeq.sorted).select(targetCols.map(col): _*).cache())
+          // the hit files under the schema the target read resolved: an
+          // evolved table's old files read its added columns as NULL, and
+          // no second schema inference runs
+          applyDv(snap.where(hit.toSet), s.read.schema(dataSchema).parquet(hit: _*))
+            .withColumn("__side", lit(0))
+            .unionByName(incoming)
+      val byKey = org.apache.spark.sql.expressions.Window.partitionBy(col(key))
+      val classified = sides
+        .withColumn("__both", min("__side").over(byKey) =!= max("__side").over(byKey))
+        .cache()
       try {
-        claimValidated(s, dir, "merge", snap.version, hit.toSeq.sorted, Some(m), beforeClaim = beforeClaim) {
-          st =>
-            val replaced = hitRows.map(m.rest(_).unionByName(alignedSource)).getOrElse(alignedSource)
-            // change-data feed: matched keys carry pre- and post-images,
-            // the rest of the source is inserts — O(source + matched)
-            val preImages = hitRows.map(m.rows)
-            val matchedKeys = preImages.map(_.select(col(key)))
-            val post = matchedKeys.map(mk =>
-              alignedSource
-                .join(mk, Seq(key), "left_semi")
-                .withColumn("_change_type", lit("update_postimage"))
-            )
-            val inserts = matchedKeys
-              .map(mk => alignedSource.join(mk, Seq(key), "left_anti"))
-              .getOrElse(alignedSource)
-              .withColumn("_change_type", lit("insert"))
-            val cdf = (preImages.map(_.withColumn("_change_type", lit("update_preimage"))).toSeq ++
-              post.toSeq :+ inserts).reduce(_ unionByName _)
-            cdf.write.mode("errorifexists").parquet(st.cdf)
-            replaced.write.mode("errorifexists").parquet(st.batch)
+        claimValidated(s, dir, "merge", snap.version, hit, Some(m), beforeClaim = beforeClaim) { st =>
+          val side = col("__side")
+          val both = col("__both")
+          classified
+            .filter(side === 1 || both)
+            .select(targetCols.map(col) :+
+              when(side === 0, "update_preimage").when(both, "update_postimage").otherwise("insert")
+                .as("_change_type"): _*)
+            .write
+            .mode("errorifexists")
+            .parquet(st.cdf)
+          classified
+            .filter(side === 1 || !both)
+            .select(targetCols.map(col): _*)
+            .write
+            .mode("errorifexists")
+            .parquet(st.batch)
         }
-      } finally hitRows.foreach(_.unpersist(false))
+      } finally classified.unpersist(false)
     } finally alignedSource.unpersist(false)
   }
 
@@ -2544,7 +2538,7 @@ object TableVersions {
       else
         // skipping-index tables are tiny metadata — driver-side read,
         // no Spark job (same rationale as [[snapshot]])
-        readParquetRowsLocal(s, table)
+        LocalParquet.rows(s, table)
           .count(g => !live.contains(qualifiedStr(s, groupString(g, "file"))))
           .toLong
     }
@@ -2606,12 +2600,7 @@ object TableVersions {
     val p = new Path(constraintsDir(dir))
     if (!fsOf(s, dir).exists(p)) Seq.empty
     else
-      s.read
-        .parquet(p.toString)
-        .collect()
-        .map(r => (r.getString(r.fieldIndex("name")), r.getString(r.fieldIndex("chk"))))
-        .toSeq
-        .sortBy(_._1)
+      LocalParquet.rows(s, p.toString).map(g => (groupString(g, "name"), groupString(g, "chk"))).sortBy(_._1)
   }
 
   /** Delta-style CHECK constraint: every row every future row-adding

@@ -80,6 +80,25 @@ class FeedViewSpec extends AnyFunSuite with SparkSpec {
     assert(viewSet(view) == direct(src))
   }
 
+  test("a sync runs a pinned number of Spark jobs") {
+    val s = spark
+    import s.implicits._
+    val src = fresh("fv_jobs_src")
+    val view = fresh("fv_jobs_view")
+    val base = (0L until 90L).map(i => (i, s"g${i % 6}", i)).toDF("id", "par", "x")
+    TableVersions.commitAppend(base.repartitionByRange(3, col("id")), src) // v0
+    FeedView.init(spark, src, view, "par", "x")
+    TableVersions.commitAppend((100L until 110L).map(i => (i, "g7", i)).toDF("id", "par", "x"), src) // v1
+    TableVersions.commitMerge(Seq((5L, "g2", 50L), (200L, "g1", 1L)).toDF("id", "par", "x"), src, "id") // v2
+    TableVersions.commitDelete(spark, src, "id < 3") // v3
+    val jobs = jobSitesOf(FeedView.sync(spark, src, view, "par", "x"): Unit)
+    // 20 jobs (28 when the merge commit wrote its change feed through
+    // three semi/anti joins and read its hit files with a second schema
+    // inference)
+    assert(jobs.total == 20, jobs.toString)
+    assert(viewSet(view) == direct(src))
+  }
+
   test("a group retracted to zero vanishes from reads and can come back") {
     val s = spark
     import s.implicits._

@@ -141,4 +141,19 @@ class ScanEquivalenceSpec extends AnyFunSuite with SparkSpec {
     // merged read imposes the checkpoint's persisted schema (none)
     assert(merged == plain - 1, s"merged-schema read ran $merged jobs, plain read $plain")
   }
+
+  test("a point read and a pruned read plan with as many Spark jobs as a plain read") {
+    val dir = freshDir()
+    (0 until 4).foreach(f => TableVersions.commitAppend(rows(f * 40L, f * 40L + 40L).coalesce(1), dir))
+    TableVersions.refreshStats(spark, dir, Seq("id"))
+    TableVersions.refreshBloom(spark, dir, Seq("body"))
+    val plain = jobSitesOf(TableVersions.readVersion(spark, dir, 3L): Unit)
+    val point = jobSitesOf(TableVersions.readVersionPoint(spark, dir, 3L, "body", "doc45"): Unit)
+    val pruned = jobSitesOf(TableVersions.readVersionPruned(spark, dir, 3L, "id", 50.0, 60.0): Unit)
+    // the stats and bloom probes read their tables on the driver
+    assert(point.total == plain.total, s"point read: $point\nplain read: $plain")
+    assert(pruned.total == plain.total, s"pruned read: $pruned\nplain read: $plain")
+    assert(TableVersions.readVersionPoint(spark, dir, 3L, "body", "doc45").count() == 1)
+    assert(TableVersions.readVersionPruned(spark, dir, 3L, "id", 50.0, 60.0).count() == 11)
+  }
 }

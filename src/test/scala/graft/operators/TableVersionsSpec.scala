@@ -536,6 +536,59 @@ class TableVersionsSpec extends AnyFunSuite with SparkSpec {
     assert(v3.filter(col("id") === 99L).select("score").head().isNullAt(0))
   }
 
+  test("schema evolution: a merge whose keys all live in pre-evolution files carries the added column") {
+    val dir = freshDir()
+    val s = spark
+    import s.implicits._
+    TableVersions.commitAppend(
+      (0L until 40L).map(i => (i, s"b$i")).toDF("id", "body").coalesce(2),
+      dir
+    ) // v0: old schema
+    TableVersions.commitAppend(
+      (40L until 60L).map(i => (i, s"b$i", i % 5)).toDF("id", "body", "score").coalesce(1),
+      dir
+    ) // v1: + score
+    // every source key lives in v0's files, which hold no score column
+    val merged = Seq((3L, "m3", 7L), (5L, "m5", 8L)).toDF("id", "body", "score")
+    assert(TableVersions.commitMerge(merged, dir, "id") == 2L)
+    val head = TableVersions.readVersion(spark, dir, 2L, mergeSchema = true)
+    assert(head.count() == 60)
+    val upserted = head
+      .filter(col("id").isin(3L, 5L))
+      .collect()
+      .map(r => (r.getAs[Long]("id"), r.getAs[String]("body"), r.getAs[Long]("score")))
+      .toSet
+    assert(upserted == Set((3L, "m3", 7L), (5L, "m5", 8L)))
+    assert(head.filter(col("score").isNull).count() == 38, "untouched pre-evolution rows must keep NULL")
+    val pre = TableVersions
+      .changesFeed(spark, dir, 1L, 2L)
+      .filter(col("_change_type") === "update_preimage")
+      .collect()
+    assert(pre.map(_.getAs[Long]("id")).toSet == Set(3L, 5L))
+    assert(pre.forall(r => r.isNullAt(r.fieldIndex("score"))), "pre-images must carry NULL score")
+  }
+
+  test("a merge runs a pinned number of Spark jobs") {
+    val s = spark
+    import s.implicits._
+    val dir = freshDir()
+    (0 until 4).foreach { f =>
+      TableVersions.commitAppend(
+        (f * 50L until f * 50L + 50L).map(i => (i, s"doc$i", i % 7)).toDF("id", "body", "v").coalesce(1),
+        dir
+      )
+    }
+    // 10 keys in one file, 10 new keys
+    val source = ((20L until 30L) ++ (500L until 510L)).map(i => (i, s"m$i", i % 5)).toDF("id", "body", "v")
+    val jobs = jobSitesOf(TableVersions.commitMerge(source, dir, "id"): Unit)
+    // 12 jobs: the source check, the key probe, the target's schema,
+    // and the classify pass writing the feed and the batch (20 when the
+    // feed was three semi/anti joins and the hit files were read with a
+    // second schema inference)
+    assert(jobs.total == 12, jobs.toString)
+    assert(TableVersions.readVersion(spark, dir, 4L).count() == 210)
+  }
+
   test("checkpoint + restore: tail re-adds override a snapshot that lacks the file") {
     val dir = freshDir()
     TableVersions.commitAppend(fixture().repartitionByRange(4, col("id")), dir) // v0
